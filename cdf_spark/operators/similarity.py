@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from ..plans.checkpoint import pin_if_expensive
 from .index_base import IndexArtifact
 from .text import hash64
 
@@ -552,38 +553,6 @@ def embedding_near_dup_pairs_fast(
 # ---------------------------------------------------------------------------
 
 
-def _pin_cents(cents: DataFrame, source: DataFrame) -> DataFrame:
-    """Pin a twice-consumed centroid sample when its SOURCE scan is
-    expensive (guide §2.4/§6, r14).
-
-    Every SQL-replayable IVF operator derives `cents` with an
-    `id % modulus == 0` filter over the corpus and then consumes it in
-    TWO plan branches (the assignment crossJoin and the probe ranking).
-    The modulo predicate cannot prune parquet row groups, so each
-    consumer re-reads the ENTIRE embedding column — two full corpus
-    scans just to derive the centroid sample. Eagerly checkpointing
-    `cents` (it is broadcast-scale by contract: ~n/modulus rows) makes
-    that one scan.
-
-    Size-gated like `_spread`: below `spark.cdf.ivf.pinCentsMinBytes`
-    of estimated source bytes (default 256 MiB) the extra scan is
-    cheaper than the extra eager job + round-trip, so the plan is left
-    alone — a no-op at bench scale, one full corpus read saved at
-    production scale. Unknown statistics stay unpinned (the
-    conservative existing behavior)."""
-    try:
-        gate = int(
-            cents.sparkSession.conf.get("spark.cdf.ivf.pinCentsMinBytes", str(256 * 1024 * 1024))
-        )
-        est = int(str(source._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-        # Long.MaxValue is the "unknown" sentinel — stay unpinned on it
-        if gate <= est < (1 << 62):
-            return cents.localCheckpoint(eager=True)
-    except Exception:
-        pass
-    return cents
-
-
 def ivf_assign(
     corpus: DataFrame,
     centroids: DataFrame,
@@ -667,7 +636,10 @@ def ivf_ann_topk(
     Output: (query_id, neighbor_id, sim, rank) — same contract as
     cosine_topk; recall < 1 by construction (quantifying it is the
     recall gate's job, tests/test_lsh_recall.py)."""
-    cents = _pin_cents(
+    # the centroid sample feeds two plan branches (assignment and probe
+    # ranking) and its modulo filter prunes no row group: above the pin
+    # gate, pinning it turns two full corpus scans into one
+    cents = pin_if_expensive(
         corpus.filter((F.col(corpus_id) % centroid_modulus) == 0).select(
             F.col(corpus_id).alias("cid"), F.col(vec_col).alias("ce")
         ),
@@ -1758,7 +1730,7 @@ def ivf_sq8_ann_topk(
     corpus×queries); shortlist + rescore are per-query windows over
     candidate rows. 1 shuffle (the final windows) at any corpus size.
     """
-    cents = _pin_cents(
+    cents = pin_if_expensive(
         corpus.filter((F.col(corpus_id) % centroid_modulus) == 0).select(
             F.col(corpus_id).alias("cid"), F.col(vec_col).alias("ce")
         ),
@@ -1844,7 +1816,7 @@ def ivf_hard_negatives(
     what makes a training-data artifact auditable.
 
     Output: (query_id, neighbor_id, neg_label, sim, rank)."""
-    cents = _pin_cents(
+    cents = pin_if_expensive(
         corpus.filter((F.col(corpus_id) % centroid_modulus) == 0).select(
             F.col(corpus_id).alias("cid"), F.col(vec_col).alias("ce")
         ),
@@ -1925,7 +1897,7 @@ def margin_bitext_mine(
     with margin >= threshold and positive similarity.
     """
     c = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("_e"), F.expr(side_expr).alias("_sa"))
-    cents = _pin_cents(
+    cents = pin_if_expensive(
         emb.filter(F.col(id_col) % centroid_modulus == 0).select(
             F.col(id_col).alias("cid"), F.col(vec_col).alias("ce")
         ),

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..contracts.policy import Contract
+from ..plans.checkpoint import observed_get
 from ..plans.scan import ScanPlan
 from ..types.schema import CanonicalSchema
 from .stats import _observe_count, dataset_value_hash, profile_and_hash
@@ -132,7 +133,7 @@ class PackageBuilder:
             .option("maxRecordsPerFile", SEGMENT_TARGET_ROWS)
             .parquet(str(pkg / "data"))
         )
-        observed = obs.get
+        observed = observed_get(obs)
         n_rows = int(observed["__rows"])
         value_hash = _vhash_render(observed, n_rows)
         stats, incomplete = footer_profile(pkg / "data", admitted.schema)
@@ -156,7 +157,7 @@ class PackageBuilder:
                 qobs_df.write.mode("overwrite").option("compression", self.compression).parquet(
                     str(pkg / "quarantine")
                 )
-                rows_quar = int(qobs.get["rows"])
+                rows_quar = int(observed_get(qobs)["rows"])
 
         package_id = "pkg-" + hashlib.sha256(
             json.dumps(

@@ -34,7 +34,6 @@ gated on `CDF_SPARK_CH_DSN` exactly like pg_copy's Postgres gate.
 
 from __future__ import annotations
 
-import time
 import uuid
 from collections.abc import Callable, Iterable
 from pathlib import Path
@@ -233,26 +232,15 @@ class ClickHouseDestination:
         finally:
             tr.close()
 
-        return Receipt(
-            receipt_id="rcp-" + uuid.uuid4().hex[:16],
-            package_id=package.package_id,
-            destination=self.destination_uri,
-            disposition=disposition.value,
-            delivery_guarantee=(
-                "at-least-once" if disposition is WriteDisposition.APPEND
-                else disposition.delivery_guarantee
-            ),
-            rows_written=package.rows_admitted,
-            value_hash=package.value_hash,
-            committed_at_ms=int(time.time() * 1000),
-        )
+        receipt = Receipt.issue(package, disposition, self.destination_uri)
+        if disposition is WriteDisposition.APPEND:
+            receipt.delivery_guarantee = "at-least-once"
+        return receipt
 
     # -- verification ------------------------------------------------------
     def verify(self, spark: SparkSession, receipt: Receipt, package: PackageResult) -> Receipt:
-        """Same multiset algebra as the other database sinks, grouped-
-        count construction (EXCEPT ALL support varies by CH version):
-        REPLACE = multiset equality, MERGE = staged batch contained
-        verbatim, APPEND = row-count lower bound."""
+        """The rules of `dbapi_dest.verify_sql`, in the grouped-count
+        construction (EXCEPT ALL support varies by CH version)."""
         schema = self._arrow_schema(package)
         names = [f.name for f in schema]
         cols = ", ".join(_q(n) for n in names)

@@ -15,10 +15,8 @@ speaking the same plan_commit -> verify protocol as
   stage (the reference's DELETE..USING + IS NOT DISTINCT FROM shape,
   `crates/cdf-dest-duckdb/src/commit.rs:150-216`; SQLite renders the
   null-safe predicate with its ``IS`` operator).
-- **verify**: containment recomputed in SQL. Engines without
-  ``EXCEPT ALL`` (SQLite) use the grouped-count construction: two
-  multisets are equal iff their (row, count(*)) group sets are equal,
-  and A ⊆ B (multiset) iff no group of A exceeds its match in B.
+- **verify**: :func:`verify_sql`, shared with the Postgres COPY and
+  DuckDB sinks.
 
 Scale posture: like the reference's database sinks, this is a
 single-connection, driver-side copy — the distributed work (scan,
@@ -32,7 +30,6 @@ from __future__ import annotations
 
 import datetime as _dt
 import decimal as _decimal
-import time
 import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -163,6 +160,67 @@ def _bindable(value, dialect: SqlDialect):
     return value
 
 
+def verify_sql(
+    receipt: Receipt,
+    scalar: Callable[[str], int],
+    table: str,
+    staged: Callable[[], str],
+    cols: list[str],
+    dialect: SqlDialect,
+) -> Receipt:
+    """Receipt verification for the SQL sinks, computed in the engine.
+
+    ``scalar(sql)`` runs one query and returns its single integer;
+    ``table`` is the quoted target; ``staged()`` returns the relation
+    holding the package rows (a temp stage table, or DuckDB's
+    ``read_parquet``), built only for the dispositions that read it.
+
+    - REPLACE: table and stage are equal as multisets.
+    - MERGE: the stage is contained in the table as a multiset, so
+      every staged row is present with its values.
+    - APPEND: ``count(table) >= rows_written``. This bound is true of
+      any package no larger than the table, so it does not prove *this*
+      package landed (a known gap).
+
+    Without ``EXCEPT ALL`` (SQLite) the multiset checks use grouped
+    counts: ``(row, count(*))`` sets are EXCEPT-compared (SQL set ops
+    treat NULLs as not distinct, so the grouping is null-safe), and
+    containment is a grouped ``LEFT JOIN`` on ``dialect.nse``.
+    """
+    d = WriteDisposition(receipt.disposition)
+    if d is WriteDisposition.APPEND:
+        receipt.verified = scalar(f"SELECT count(*) FROM {table}") >= receipt.rows_written
+        return receipt
+    if d not in (WriteDisposition.REPLACE, WriteDisposition.MERGE):
+        raise ValueError(f"cannot verify a {d.value} receipt in SQL")
+    stg = staged()
+    c = ", ".join(_q(n) for n in cols)
+    if dialect.supports_except_all:
+        fwd = f"SELECT {c} FROM {stg} EXCEPT ALL SELECT {c} FROM {table}"
+        bwd = f"SELECT {c} FROM {table} EXCEPT ALL SELECT {c} FROM {stg}"
+    else:
+        gs = f"SELECT {c}, count(*) AS _n FROM {stg} GROUP BY {c}"
+        gt = f"SELECT {c}, count(*) AS _n FROM {table} GROUP BY {c}"
+        fwd = f"{gs} EXCEPT {gt}"
+        bwd = f"{gt} EXCEPT {gs}"
+    if d is WriteDisposition.REPLACE:
+        # two separate counts: EXCEPT/UNION are equal-precedence
+        # left-associative in SQLite, so one compound misparses
+        ok = scalar(f"SELECT count(*) FROM ({fwd})") == 0 and (
+            scalar(f"SELECT count(*) FROM ({bwd})") == 0
+        )
+    elif dialect.supports_except_all:
+        ok = scalar(f"SELECT count(*) FROM ({fwd})") == 0
+    else:
+        on = " AND ".join(dialect.nse(f"s.{_q(n)}", f"g.{_q(n)}") for n in cols)
+        ok = scalar(
+            f"SELECT count(*) FROM ({gs}) s LEFT JOIN ({gt}) g "
+            f"ON {on} WHERE g._n IS NULL OR g._n < s._n"
+        ) == 0
+    receipt.verified = bool(ok)
+    return receipt
+
+
 class DbApiDestination:
     """A commit-protocol destination over any DB-API connection.
 
@@ -203,6 +261,15 @@ class DbApiDestination:
 
     def _create_target(self, cur, schema) -> None:
         cur.execute(f"CREATE TABLE IF NOT EXISTS {_q(self.table)} ({self._ddl_columns(schema)})")
+
+    def _stage(self, cur, package: PackageResult, name: str, schema) -> str:
+        """Load the package into a new temp table; returns its quoted name."""
+        cur.execute(
+            f"CREATE {self.dialect.temp_table_prefix} TABLE {_q(name)} "
+            f"({self._ddl_columns(schema)})"
+        )
+        self._load_segments(cur, package, name, schema)
+        return _q(name)
 
     def _load_segments(self, cur, package: PackageResult, into: str, schema) -> int:
         """Stream parquet segments into `into` via Arrow record batches."""
@@ -249,11 +316,7 @@ class DbApiDestination:
                     raise ValueError("merge disposition requires merge_keys")
                 self._create_target(cur, schema)
                 stg = f"_cdf_stage_{uuid.uuid4().hex[:8]}"
-                cur.execute(
-                    f"CREATE {self.dialect.temp_table_prefix} TABLE {_q(stg)} "
-                    f"({self._ddl_columns(schema)})"
-                )
-                self._load_segments(cur, package, stg, schema)
+                self._stage(cur, package, stg, schema)
                 pred = " AND ".join(
                     self.dialect.nse(f"{t}.{_q(k)}", f"{_q(stg)}.{_q(k)}")
                     for k in self.merge_keys
@@ -273,82 +336,32 @@ class DbApiDestination:
         finally:
             con.close()
 
-        return Receipt(
-            receipt_id="rcp-" + uuid.uuid4().hex[:16],
-            package_id=package.package_id,
-            destination=self.destination_uri,
-            disposition=disposition.value,
-            delivery_guarantee=disposition.delivery_guarantee,
-            rows_written=package.rows_admitted,
-            value_hash=package.value_hash,
-            committed_at_ms=int(time.time() * 1000),
-        )
+        return Receipt.issue(package, disposition, self.destination_uri)
 
     # -- verification ------------------------------------------------------
-    def _with_stage(self, cur, package: PackageResult):
+    def verify(self, spark: SparkSession, receipt: Receipt, package: PackageResult) -> Receipt:
         schema = self._arrow_schema(package)
         stg = f"_cdf_verify_{uuid.uuid4().hex[:8]}"
-        cur.execute(
-            f"CREATE {self.dialect.temp_table_prefix} TABLE {_q(stg)} "
-            f"({self._ddl_columns(schema)})"
-        )
-        self._load_segments(cur, package, stg, schema)
-        return stg, [f.name for f in schema]
-
-    def verify(self, spark: SparkSession, receipt: Receipt, package: PackageResult) -> Receipt:
-        """REPLACE: multiset equality; MERGE: staged batch present
-        verbatim (multiset containment); APPEND: row-count lower bound.
-
-        Without EXCEPT ALL the multiset checks use grouped counts:
-        ``(row, count(*))`` sets are EXCEPT-compared (SQL set ops treat
-        NULLs as not distinct, so the grouping is null-safe for free).
-        """
-        t = _q(self.table)
         con = self.connect()
         try:
             cur = con.cursor()
-            if receipt.disposition == WriteDisposition.APPEND.value:
-                cur.execute(f"SELECT count(*) FROM {t}")
-                ok = cur.fetchone()[0] >= receipt.rows_written
-            else:
-                stg, names = self._with_stage(cur, package)
-                cols = ", ".join(_q(n) for n in names)
-                if self.dialect.supports_except_all:
-                    fwd = f"SELECT {cols} FROM {_q(stg)} EXCEPT ALL SELECT {cols} FROM {t}"
-                    bwd = f"SELECT {cols} FROM {t} EXCEPT ALL SELECT {cols} FROM {_q(stg)}"
-                else:
-                    gs = f"SELECT {cols}, count(*) AS _n FROM {_q(stg)} GROUP BY {cols}"
-                    gt = f"SELECT {cols}, count(*) AS _n FROM {t} GROUP BY {cols}"
-                    fwd = f"{gs} EXCEPT {gt}"
-                    bwd = f"{gt} EXCEPT {gs}"
-                if receipt.disposition == WriteDisposition.REPLACE.value:
-                    # two separate counts: EXCEPT/UNION are equal-precedence
-                    # left-associative in SQLite, so one compound misparses
-                    cur.execute(f"SELECT count(*) FROM ({fwd})")
-                    n_fwd = cur.fetchone()[0]
-                    cur.execute(f"SELECT count(*) FROM ({bwd})")
-                    ok = n_fwd == 0 and cur.fetchone()[0] == 0
-                else:  # merge: staged ⊆ target as multisets
-                    if self.dialect.supports_except_all:
-                        cur.execute(f"SELECT count(*) FROM ({fwd})")
-                        ok = cur.fetchone()[0] == 0
-                    else:
-                        on = " AND ".join(
-                            self.dialect.nse(f"s.{_q(n)}", f"g.{_q(n)}") for n in names
-                        )
-                        cur.execute(
-                            f"SELECT count(*) FROM "
-                            f"(SELECT {cols}, count(*) AS _n FROM {_q(stg)} GROUP BY {cols}) s "
-                            f"LEFT JOIN "
-                            f"(SELECT {cols}, count(*) AS _n FROM {t} GROUP BY {cols}) g "
-                            f"ON {on} WHERE g._n IS NULL OR g._n < s._n"
-                        )
-                        ok = cur.fetchone()[0] == 0
-                cur.execute(f"DROP TABLE {_q(stg)}")
+
+            def scalar(sql: str) -> int:
+                cur.execute(sql)
+                return cur.fetchone()[0]
+
+            verify_sql(
+                receipt,
+                scalar,
+                _q(self.table),
+                lambda: self._stage(cur, package, stg, schema),
+                schema.names,
+                self.dialect,
+            )
+            cur.execute(f"DROP TABLE IF EXISTS {_q(stg)}")
             con.commit()
         finally:
             con.close()
-        receipt.verified = bool(ok)
         return receipt
 
     # -- readback ----------------------------------------------------------

@@ -21,7 +21,6 @@ previous version current.
 from __future__ import annotations
 
 import time
-import uuid
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -29,8 +28,7 @@ from pyspark.sql import SparkSession
 from ..sources.base import WriteDisposition
 from ..sources.delta import DeltaFixtureWriter, DeltaTable
 from .builder import PackageResult
-from .ledger import Receipt
-from .stats import dataset_value_hash
+from .ledger import Receipt, verify_frame
 
 
 class DeltaDestination:
@@ -156,32 +154,10 @@ class DeltaDestination:
             self.last_uniform_sync = sync_delta_to_iceberg(
                 self.table_path, self.table_path
             )
-        return Receipt(
-            receipt_id="rcp-" + uuid.uuid4().hex[:16],
-            package_id=package.package_id,
-            destination=f"delta://{self.table_path}",
-            disposition=disposition.value,
-            delivery_guarantee=disposition.delivery_guarantee,
-            rows_written=package.rows_admitted,
-            value_hash=package.value_hash,
-            committed_at_ms=int(time.time() * 1000),
-        )
+        return Receipt.issue(package, disposition, f"delta://{self.table_path}")
 
     def verify(self, spark: SparkSession, receipt: Receipt, package: PackageResult) -> Receipt:
-        df = self.read(spark)
-        if receipt.disposition == WriteDisposition.REPLACE.value:
-            ok = dataset_value_hash(df) == package.value_hash
-        elif receipt.disposition == WriteDisposition.MERGE.value:
-            staged = spark.read.parquet(package.data_path())
-            cond = [staged[k].eqNullSafe(df[k]) for k in self.merge_keys]
-            joined = cond[0]
-            for c in cond[1:]:
-                joined = joined & c
-            ok = staged.join(df, on=joined, how="left_anti").isEmpty()
-        else:  # append: package rows all present (count lower bound)
-            ok = df.count() >= receipt.rows_written
-        receipt.verified = bool(ok)
-        return receipt
+        return verify_frame(spark, receipt, package, self.read(spark), self.merge_keys)
 
     def read(self, spark: SparkSession):
         return DeltaTable(self.table_path).read(spark)

@@ -12,9 +12,8 @@ for the null-safe predicate rendering) on top of the package layer:
   optimized to >1 GiB/s (docs/performance-baseline.md).
 - MERGE runs inside one DuckDB transaction: delete matching keys
   (null-safe), then insert the staged batch. A crash rolls back.
-- `verify` recomputes containment in SQL: REPLACE verifies full
-  multiset equality (`EXCEPT ALL` both ways), MERGE verifies the staged
-  batch is present verbatim, APPEND verifies the row-count lower bound.
+- `verify` runs the shared SQL rules (`dbapi_dest.verify_sql`) with
+  the package segments as the staged relation.
 
 Scale posture: DuckDB is a single-node sink (as in the reference); the
 distributed part — scan, contract, dedup, evidence — happened upstream
@@ -24,7 +23,6 @@ segments on shared storage; the data path stays columnar end-to-end.
 
 from __future__ import annotations
 
-import time
 import uuid
 from pathlib import Path
 
@@ -32,6 +30,7 @@ from pyspark.sql import SparkSession
 
 from ..sources.base import WriteDisposition
 from .builder import PackageResult
+from .dbapi_dest import DUCKDB_DIALECT, verify_sql
 from .ledger import Receipt
 
 try:  # pragma: no cover - import gate
@@ -115,16 +114,7 @@ class DuckDbDestination:
         finally:
             con.close()
 
-        return Receipt(
-            receipt_id="rcp-" + uuid.uuid4().hex[:16],
-            package_id=package.package_id,
-            destination=f"duckdb://{self.db_path}#{self.table}",
-            disposition=disposition.value,
-            delivery_guarantee=disposition.delivery_guarantee,
-            rows_written=package.rows_admitted,
-            value_hash=package.value_hash,
-            committed_at_ms=int(time.time() * 1000),
-        )
+        return Receipt.issue(package, disposition, f"duckdb://{self.db_path}#{self.table}")
 
     def _merge(self, con, glob: str) -> None:
         """Stage + DELETE..USING + INSERT, one transaction
@@ -153,40 +143,20 @@ class DuckDbDestination:
             raise
 
     def verify(self, spark: SparkSession, receipt: Receipt, package: PackageResult) -> Receipt:
-        """Receipt verification, computed entirely in DuckDB SQL:
-
-        - REPLACE: table multiset-equals the package segments
-          (`EXCEPT ALL` in both directions is empty);
-        - MERGE: every staged row is present verbatim;
-        - APPEND: row count >= rows_written.
-        """
-        glob = self._segment_glob(package)
-        t = _quote_ident(self.table)
+        staged = f"read_parquet({_quote_lit(self._segment_glob(package))})"
         con = self._connect()
         try:
-            if receipt.disposition == WriteDisposition.REPLACE.value:
-                diff = con.execute(
-                    f"SELECT count(*) FROM ("
-                    f"  (SELECT * FROM {t} EXCEPT ALL SELECT * FROM read_parquet(?))"
-                    f"  UNION ALL "
-                    f"  (SELECT * FROM read_parquet(?) EXCEPT ALL SELECT * FROM {t})"
-                    f")",
-                    [glob, glob],
-                ).fetchone()[0]
-                ok = diff == 0
-            elif receipt.disposition == WriteDisposition.MERGE.value:
-                missing = con.execute(
-                    f"SELECT count(*) FROM "
-                    f"(SELECT * FROM read_parquet(?) EXCEPT ALL SELECT * FROM {t})",
-                    [glob],
-                ).fetchone()[0]
-                ok = missing == 0
-            else:  # append
-                n = con.execute(f"SELECT count(*) FROM {t}").fetchone()[0]
-                ok = n >= receipt.rows_written
+            cols = [d[0] for d in con.execute(f"SELECT * FROM {staged} LIMIT 0").description]
+            verify_sql(
+                receipt,
+                lambda sql: con.execute(sql).fetchone()[0],
+                _quote_ident(self.table),
+                lambda: staged,
+                cols,
+                DUCKDB_DIALECT,
+            )
         finally:
             con.close()
-        receipt.verified = bool(ok)
         return receipt
 
     # -- readback ---------------------------------------------------------

@@ -32,8 +32,7 @@ from pyspark.sql import functions as F
 from ..sources.base import WriteDisposition
 from ..sources.hudi import HudiFixtureWriter, HudiTable
 from .builder import PackageResult
-from .ledger import Receipt
-from .stats import dataset_value_hash
+from .ledger import Receipt, verify_frame
 
 
 def _group_prunable_by_stats(
@@ -170,16 +169,7 @@ class HudiDestination:
                 instant = None
             if instant:
                 self._write_blooms(spark, instant)
-        return Receipt(
-            receipt_id="rcp-" + uuid.uuid4().hex[:16],
-            package_id=package.package_id,
-            destination=f"hudi://{self.table_path}",
-            disposition=disposition.value,
-            delivery_guarantee=disposition.delivery_guarantee,
-            rows_written=package.rows_admitted,
-            value_hash=package.value_hash,
-            committed_at_ms=int(time.time() * 1000),
-        )
+        return Receipt.issue(package, disposition, f"hudi://{self.table_path}")
 
     def _bloom_dir(self) -> Path:
         return self.table_path / ".hoodie" / "bloom"
@@ -490,20 +480,7 @@ class HudiDestination:
                 shutil.rmtree(r, ignore_errors=True)
 
     def verify(self, spark: SparkSession, receipt: Receipt, package: PackageResult) -> Receipt:
-        df = self.read(spark)
-        if receipt.disposition == WriteDisposition.MERGE.value:
-            staged = spark.read.parquet(package.data_path())
-            cond = reduce(
-                lambda a, b: a & b,
-                [staged[k].eqNullSafe(df[k]) for k in self.merge_keys],
-            )
-            ok = staged.join(df, on=cond, how="left_anti").isEmpty()
-        elif receipt.disposition == WriteDisposition.REPLACE.value:
-            ok = dataset_value_hash(df) == package.value_hash
-        else:  # append: package rows all present (count lower bound)
-            ok = df.count() >= receipt.rows_written
-        receipt.verified = bool(ok)
-        return receipt
+        return verify_frame(spark, receipt, package, self.read(spark), self.merge_keys)
 
     def read(self, spark: SparkSession):
         """The copy-on-write resolved current state — exactly what any

@@ -37,9 +37,6 @@ Scale discipline:
 from __future__ import annotations
 
 import json
-import time
-import uuid
-from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -56,7 +53,7 @@ from ..sources.hudi_mor import (
     encode_delete_block,
 )
 from .builder import PackageResult
-from .ledger import Receipt
+from .ledger import Receipt, verify_frame
 
 
 def _py(v, avro_type):
@@ -209,16 +206,7 @@ class HudiMorDestination:
                 "(REPLACE belongs to the CoW destination; MoR streaming ingest "
                 "is APPEND/MERGE/CDC_APPLY + compaction)"
             )
-        return Receipt(
-            receipt_id="rcp-" + uuid.uuid4().hex[:16],
-            package_id=package.package_id,
-            destination=f"hudi+mor://{self.table_path}",
-            disposition=disposition.value,
-            delivery_guarantee=disposition.delivery_guarantee,
-            rows_written=package.rows_admitted,
-            value_hash=package.value_hash,
-            committed_at_ms=int(time.time() * 1000),
-        )
+        return Receipt.issue(package, disposition, f"hudi+mor://{self.table_path}")
 
     def _append_log_commit(self, spark: SparkSession, batch, op_col: str | None = None) -> None:
         """ONE delta commit: per touched (partition, bucket) file group
@@ -360,8 +348,8 @@ class HudiMorDestination:
 
     def verify(self, spark: SparkSession, receipt: Receipt, package: PackageResult) -> Receipt:
         df = self.read(spark)
-        staged = spark.read.parquet(package.data_path())
         if receipt.disposition == WriteDisposition.CDC_APPLY.value:
+            staged = spark.read.parquet(package.data_path())
             ups = staged.filter(F.col(self.cdc_op_col) != "delete")
             dels = staged.filter(F.col(self.cdc_op_col) == "delete")
             cond_u = ups[self.record_key].eqNullSafe(df[self.record_key])
@@ -372,17 +360,7 @@ class HudiMorDestination:
             ok = ok and dels.join(df, on=cond_d, how="left_semi").isEmpty()
             receipt.verified = bool(ok)
             return receipt
-        if receipt.disposition == WriteDisposition.MERGE.value:
-            cond = reduce(
-                lambda a, b: a & b,
-                [staged[k].eqNullSafe(df[k]) for k in [self.record_key]],
-            )
-            ok = staged.join(df, on=cond, how="left_anti").isEmpty()
-        else:  # append: package rows all present by key
-            cond = staged[self.record_key].eqNullSafe(df[self.record_key])
-            ok = staged.join(df, on=cond, how="left_anti").isEmpty()
-        receipt.verified = bool(ok)
-        return receipt
+        return verify_frame(spark, receipt, package, df, [self.record_key])
 
     def read(self, spark: SparkSession):
         """The merge-on-read SNAPSHOT — base files + pending log blocks

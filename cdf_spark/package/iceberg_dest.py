@@ -20,18 +20,15 @@ the open-format counterpart of the reference's destination family
   data, not 100%.
 
 Verification reads the table back THROUGH the Iceberg reader (the
-same resolution any consumer uses): REPLACE = full value-hash
-equality, MERGE = null-safe containment of the staged batch, APPEND =
-row-count lower bound. Commits are atomic at the metadata level: the
-version-hint/metadata.json swap is the last step, so a crash mid-write
-leaves the previous snapshot current (orphaned files, never a corrupt
-table).
+same resolution any consumer uses). Commits are atomic at the metadata
+level: the version-hint/metadata.json swap is the last step, so a
+crash mid-write leaves the previous snapshot current (orphaned files,
+never a corrupt table).
 """
 
 from __future__ import annotations
 
 import time
-import uuid
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -39,8 +36,7 @@ from pyspark.sql import SparkSession
 from ..sources.base import WriteDisposition
 from ..sources.iceberg import IcebergFixtureWriter, IcebergTable
 from .builder import PackageResult
-from .ledger import Receipt
-from .stats import dataset_value_hash
+from .ledger import Receipt, verify_frame
 
 
 class IcebergDestination:
@@ -155,15 +151,8 @@ class IcebergDestination:
                     w.append(spark.read.parquet(package.data_path()), branch=self.stage_branch)
                 else:
                     w.append_files(segments, branch=self.stage_branch)
-                return Receipt(
-                    receipt_id="rcp-" + uuid.uuid4().hex[:16],
-                    package_id=package.package_id,
-                    destination=f"iceberg://{self.table_path}@{self.stage_branch}",
-                    disposition=disposition.value,
-                    delivery_guarantee=disposition.delivery_guarantee,
-                    rows_written=package.rows_admitted,
-                    value_hash=package.value_hash,
-                    committed_at_ms=int(time.time() * 1000),
+                return Receipt.issue(
+                    package, disposition, f"iceberg://{self.table_path}@{self.stage_branch}"
                 )
         if w.partition_by:
             # partitioned table (spec rehydrated from metadata): commit
@@ -329,16 +318,7 @@ class IcebergDestination:
                 shutil.rmtree(tmp, ignore_errors=True)
         else:
             raise ValueError(f"disposition {disposition} not supported by IcebergDestination")
-        return Receipt(
-            receipt_id="rcp-" + uuid.uuid4().hex[:16],
-            package_id=package.package_id,
-            destination=f"iceberg://{self.table_path}",
-            disposition=disposition.value,
-            delivery_guarantee=disposition.delivery_guarantee,
-            rows_written=package.rows_admitted,
-            value_hash=package.value_hash,
-            committed_at_ms=int(time.time() * 1000),
-        )
+        return Receipt.issue(package, disposition, f"iceberg://{self.table_path}")
 
     def verify(self, spark: SparkSession, receipt: Receipt, package: PackageResult) -> Receipt:
         if self.stage_branch is not None and receipt.destination.endswith(
@@ -355,20 +335,7 @@ class IcebergDestination:
             if receipt.verified:
                 t.fast_forward(self.stage_branch)
             return receipt
-        df = self.read(spark)
-        if receipt.disposition == WriteDisposition.REPLACE.value:
-            ok = dataset_value_hash(df) == package.value_hash
-        elif receipt.disposition == WriteDisposition.MERGE.value:
-            staged = spark.read.parquet(package.data_path())
-            cond = [staged[k].eqNullSafe(df[k]) for k in self.merge_keys]
-            joined = cond[0]
-            for c in cond[1:]:
-                joined = joined & c
-            ok = staged.join(df, on=joined, how="left_anti").isEmpty()
-        else:  # append: package rows all present (count lower bound)
-            ok = df.count() >= receipt.rows_written
-        receipt.verified = bool(ok)
-        return receipt
+        return verify_frame(spark, receipt, package, self.read(spark), self.merge_keys)
 
     def read(self, spark: SparkSession):
         """The merge-on-read resolved current state — exactly what any

@@ -8,6 +8,11 @@ commits into a destination under a write disposition; the destination
 returns a receipt; the checkpoint advances ONLY after the receipt
 verifies. Positions (cursors/frontiers) ride on the checkpoint.
 
+Every destination builds its receipt with `Receipt.issue`. The
+verification rules live in two places, one per backend: `verify_frame`
+here for destinations Spark reads back as a frame, and
+`dbapi_dest.verify_sql` for the SQL sinks.
+
 Without Delta in this image, destinations are parquet directories:
   append   -> write new files into the table dir (at-least-once)
   replace  -> overwrite the table dir (effectively-once per target)
@@ -22,6 +27,7 @@ import json
 import time
 import uuid
 from dataclasses import asdict, dataclass, field
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,6 +49,57 @@ class Receipt:
     value_hash: str
     committed_at_ms: int
     verified: bool = False
+
+    @classmethod
+    def issue(cls, package: PackageResult, disposition: WriteDisposition, destination: str) -> Receipt:
+        """The unverified receipt a destination returns from `commit`."""
+        return cls(
+            receipt_id="rcp-" + uuid.uuid4().hex[:16],
+            package_id=package.package_id,
+            destination=destination,
+            disposition=disposition.value,
+            delivery_guarantee=disposition.delivery_guarantee,
+            rows_written=package.rows_admitted,
+            value_hash=package.value_hash,
+            committed_at_ms=int(time.time() * 1000),
+        )
+
+
+def verify_frame(
+    spark: SparkSession,
+    receipt: Receipt,
+    package: PackageResult | None,
+    table: DataFrame,
+    keys: list[str],
+) -> Receipt:
+    """Receipt verification for every destination Spark reads back as
+    one frame (`table`: the destination's current state).
+
+    - REPLACE: `table` hashes to the package's value hash.
+    - MERGE: every staged key is present in `table` (a null-safe
+      `left_anti` join from the package segments returns no rows).
+    - APPEND with keys: the same key containment as MERGE.
+    - APPEND without keys: `table.count() >= rows_written`. This path
+      reads neither `package` nor its segments.
+
+    Two known gaps. The keyless APPEND bound is true of any package no
+    larger than the table, so it does not prove *this* package landed.
+    MERGE and keyed APPEND prove the staged keys are present, not their
+    values (the SQL backend, `dbapi_dest.verify_sql`, proves values).
+    """
+    d = WriteDisposition(receipt.disposition)
+    if d is WriteDisposition.REPLACE:
+        ok = dataset_value_hash(table) == package.value_hash
+    elif keys and d in (WriteDisposition.MERGE, WriteDisposition.APPEND):
+        staged = spark.read.parquet(package.data_path())
+        cond = reduce(lambda a, b: a & b, [staged[k].eqNullSafe(table[k]) for k in keys])
+        ok = staged.join(table, on=cond, how="left_anti").isEmpty()
+    elif d is WriteDisposition.APPEND:
+        ok = table.count() >= receipt.rows_written
+    else:
+        raise ValueError(f"cannot verify a {d.value} receipt without merge keys")
+    receipt.verified = bool(ok)
+    return receipt
 
 
 @dataclass
@@ -68,8 +125,6 @@ class ParquetDestination:
         package: PackageResult,
         disposition: WriteDisposition = WriteDisposition.APPEND,
     ) -> Receipt:
-        rows = package.rows_admitted
-
         if disposition is WriteDisposition.APPEND:
             self._copy_segments(package, clear_first=False)
         elif disposition is WriteDisposition.REPLACE:
@@ -82,16 +137,7 @@ class ParquetDestination:
         else:
             raise ValueError(f"disposition {disposition} not supported by ParquetDestination")
 
-        return Receipt(
-            receipt_id="rcp-" + uuid.uuid4().hex[:16],
-            package_id=package.package_id,
-            destination=str(self.table_path),
-            disposition=disposition.value,
-            delivery_guarantee=disposition.delivery_guarantee,
-            rows_written=rows,
-            value_hash=package.value_hash,
-            committed_at_ms=int(time.time() * 1000),
-        )
+        return Receipt.issue(package, disposition, str(self.table_path))
 
     def _copy_segments(self, package: PackageResult, clear_first: bool) -> None:
         """Package segments are already canonical parquet — commit by
@@ -145,24 +191,10 @@ class ParquetDestination:
             shutil.rmtree(old)
 
     def verify(self, spark: SparkSession, receipt: Receipt, package: PackageResult) -> Receipt:
-        """Receipt verification: the committed destination must contain
-        exactly the package's rows (append: at least; replace: exactly)."""
-        df = spark.read.parquet(str(self.table_path))
-        if receipt.disposition == WriteDisposition.REPLACE.value:
-            ok = dataset_value_hash(df) == package.value_hash
-        elif receipt.disposition == WriteDisposition.MERGE.value:
-            # null-safe containment check, same predicate as _merge —
-            # a NULL key component must still count as present
-            staged = spark.read.parquet(package.data_path())
-            cond = [staged[k].eqNullSafe(df[k]) for k in self.merge_keys]
-            joined_cond = cond[0]
-            for c in cond[1:]:
-                joined_cond = joined_cond & c
-            ok = staged.join(df, on=joined_cond, how="left_anti").isEmpty()
-        else:  # append: package rows all present (by count of key-hash)
-            ok = df.count() >= receipt.rows_written
-        receipt.verified = bool(ok)
-        return receipt
+        return verify_frame(spark, receipt, package, self.read(spark), self.merge_keys)
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        return spark.read.parquet(str(self.table_path))
 
 
 class CheckpointLedger:

@@ -592,9 +592,6 @@ class PostgresCopyDestination:
 
     # -- protocol ---------------------------------------------------------
     def commit(self, spark, package, disposition=None):
-        import time
-        import uuid
-
         from ..sources.base import WriteDisposition
         from .ledger import Receipt
 
@@ -607,16 +604,7 @@ class PostgresCopyDestination:
         else:
             self._commit_driver(package, disposition, schema)
 
-        return Receipt(
-            receipt_id="rcp-" + uuid.uuid4().hex[:16],
-            package_id=package.package_id,
-            destination=self.destination_uri,
-            disposition=disposition.value,
-            delivery_guarantee=disposition.delivery_guarantee,
-            rows_written=package.rows_admitted,
-            value_hash=package.value_hash,
-            committed_at_ms=int(time.time() * 1000),
-        )
+        return Receipt.issue(package, disposition, self.destination_uri)
 
     def _commit_driver(self, package, disposition, schema) -> None:
         """Driver COPY: one transport, whole stage + merge in a single
@@ -737,46 +725,32 @@ class PostgresCopyDestination:
             tr.close()
 
     def verify(self, spark, receipt, package):
-        """Same verification algebra as DbApiDestination's POSTGRES
-        dialect: EXCEPT ALL containment / equality recomputed in SQL."""
-        from .dbapi_dest import DbApiDestination
+        """The shared SQL rules (`dbapi_dest.verify_sql`), with the
+        package COPY-staged into a temp table when a rule reads it."""
+        import uuid
 
-        class _TransportConn:
-            """Adapt CopyTransport to the DB-API surface verify() uses."""
+        from .dbapi_dest import verify_sql
 
-            def __init__(self, tr):
-                self.tr = tr
+        schema = self._arrow_schema(package)
+        stg = f"_cdf_verify_{uuid.uuid4().hex[:8]}"
+        tr = self.transport_factory()
+        try:
 
-            def cursor(self):
-                return _TransportCursor(self.tr)
+            def staged() -> str:
+                tr.execute(f"CREATE TEMPORARY TABLE {_q(stg)} ({self._ddl_columns(schema)})")
+                self._copy_segments(tr, package, stg, schema)
+                return _q(stg)
 
-            def commit(self):
-                self.tr.commit()
-
-            def close(self):
-                self.tr.close()
-
-        class _TransportCursor:
-            def __init__(self, tr):
-                self.tr = tr
-                self._last = None
-
-            def execute(self, sql, params=None):
-                self._last = self.tr.execute(sql, params)
-                return self._last
-
-            def executemany(self, sql, rows):
-                for r in rows:
-                    self.tr.execute(sql, r)
-
-            def fetchone(self):
-                return self._last.fetchone()
-
-        shim = DbApiDestination.__new__(DbApiDestination)
-        shim.connect = lambda: _TransportConn(self.transport_factory())
-        shim.table = self.table
-        shim.merge_keys = self.merge_keys
-        shim.dialect = self.dialect
-        shim.batch_rows = 65536
-        shim.destination_uri = self.destination_uri
-        return shim.verify(spark, receipt, package)
+            verify_sql(
+                receipt,
+                lambda sql: tr.execute(sql).fetchone()[0],
+                _q(self.table),
+                staged,
+                schema.names,
+                self.dialect,
+            )
+            tr.execute(f"DROP TABLE IF EXISTS {_q(stg)}")
+            tr.commit()
+        finally:
+            tr.close()
+        return receipt

@@ -39,7 +39,6 @@ from __future__ import annotations
 
 import json
 import shutil
-import time
 import uuid
 from pathlib import Path
 
@@ -48,7 +47,7 @@ from pyspark.sql import functions as F
 
 from ..sources.base import WriteDisposition
 from .builder import PackageResult
-from .ledger import Receipt
+from .ledger import Receipt, verify_frame
 
 VERSION_COL = "_cdf_version"
 
@@ -115,16 +114,7 @@ class TombstoneParquetDestination:
 
         state["current"] = v
         self._advance(state)
-        return Receipt(
-            receipt_id="rcp-" + uuid.uuid4().hex[:16],
-            package_id=package.package_id,
-            destination=str(self.table_path),
-            disposition=disposition.value,
-            delivery_guarantee=disposition.delivery_guarantee,
-            rows_written=package.rows_admitted,
-            value_hash=package.value_hash,
-            committed_at_ms=int(time.time() * 1000),
-        )
+        return Receipt.issue(package, disposition, str(self.table_path))
 
     # -- read view -------------------------------------------------------
     _OPS = {
@@ -230,22 +220,4 @@ class TombstoneParquetDestination:
 
     # -- verification ----------------------------------------------------
     def verify(self, spark: SparkSession, receipt: Receipt, package: PackageResult) -> Receipt:
-        """Merge/append: every staged row's key must be live exactly as
-        staged (null-safe containment, the `_merge` check); replace:
-        the live view must hash to the package."""
-        from .stats import dataset_value_hash
-
-        live = self.read(spark)
-        staged = spark.read.parquet(package.data_path())
-        if receipt.disposition == WriteDisposition.REPLACE.value:
-            ok = dataset_value_hash(live) == package.value_hash
-        else:
-            cond = staged[self.merge_keys[0]].eqNullSafe(live[self.merge_keys[0]]) if self.merge_keys else None
-            if cond is not None:
-                for k in self.merge_keys[1:]:
-                    cond = cond & staged[k].eqNullSafe(live[k])
-                ok = staged.join(live, on=cond, how="left_anti").isEmpty()
-            else:
-                ok = live.count() >= receipt.rows_written
-        receipt.verified = bool(ok)
-        return receipt
+        return verify_frame(spark, receipt, package, self.read(spark), self.merge_keys)

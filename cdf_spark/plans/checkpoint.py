@@ -37,8 +37,7 @@ PIN_GATE_DEFAULT = 256 * 1024 * 1024
 def pin_worthwhile(source: DataFrame) -> bool:
     """True when `source`'s estimated scan size is above the pin gate
     — i.e. re-deriving work over it once per consumer costs more than
-    one synchronous eager-checkpoint job (guide §5 "caching", the
-    `_pin_cents` size-gate discipline generalized, r15).
+    one synchronous eager-checkpoint job (guide §5 "caching").
 
     Unknown statistics (Long.MaxValue sentinel) return False — the
     conservative lazy shape."""
@@ -70,19 +69,21 @@ def observed_get(obs: Observation, timeout_s: float = 300.0) -> dict:
     future Spark stops routing checkpoint materialization through the
     QueryExecutionListener path, every call site would hang silently.
     Polling the non-blocking JVM accessor with a deadline turns that
-    into a diagnosable failure instead."""
+    into a diagnosable failure instead. A failing accessor raises too,
+    rather than falling back to the blocking get."""
+    name = obs._name or "<unnamed>"
     deadline = time.monotonic() + timeout_s
     while True:
         try:
-            row = obs._jo.getRowOrEmpty()
-            if row.isDefined():
-                return obs.get
-        except Exception:  # noqa: BLE001 — fall back to the blocking get
+            defined = obs._jo.getRowOrEmpty().isDefined()
+        except Exception as exc:  # noqa: BLE001 — any accessor failure is fatal
+            raise RuntimeError(f"Observation {name!r}: metrics accessor failed: {exc}") from exc
+        if defined:
             return obs.get
         if time.monotonic() > deadline:
             raise RuntimeError(
-                f"Observation metrics did not fire within {timeout_s}s — the "
-                "observed action (typically an eager localCheckpoint) either "
+                f"Observation {name!r}: metrics did not fire within {timeout_s}s — "
+                "the observed action (typically an eager localCheckpoint) either "
                 "never ran or this Spark no longer reports metrics for it"
             )
         time.sleep(0.01)

@@ -365,13 +365,14 @@ def test_ivf_sq8_recall_vs_exact(spark):
 
 
 def test_pin_cents_gate_is_value_neutral_and_cuts_scans(spark):
-    """r14 `_pin_cents`: the twice-consumed centroid sample (assignment
+    """The IVF pin: the twice-consumed centroid sample (assignment
     + probe ranking) re-reads the whole embedding column per consumer —
     the modulo filter cannot prune parquet. Above the size gate the
     sample is eagerly checkpointed; this asserts (a) the default gate
     leaves small inputs unpinned, (b) a forced gate halves the corpus
     scans in the final plan, and (c) pinned output is value-identical."""
     from cdf_spark.operators.similarity import ivf_ann_topk
+    from cdf_spark.plans.checkpoint import PIN_GATE_CONF
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     queries = emb.filter("vec_id < 5")
@@ -383,7 +384,7 @@ def test_pin_cents_gate_is_value_neutral_and_cuts_scans(spark):
         )
         return plan.count("Scan parquet")
 
-    gate_key = "spark.cdf.ivf.pinCentsMinBytes"
+    gate_key = PIN_GATE_CONF
     old = spark.conf.get(gate_key, None)
     try:
         spark.conf.set(gate_key, str(1 << 61))  # never pin

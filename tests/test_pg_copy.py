@@ -229,6 +229,69 @@ def test_replace_rolls_back_on_error(spark, tmp_path, sf_dir):
     assert ("commit",) not in log
 
 
+class _DuckPgCursor:
+    def __init__(self, conn):
+        self.conn = conn
+        self._res = None
+
+    def execute(self, sql, params=None):
+        self._res = self.conn.con.execute(sql, params or None)
+
+    def fetchone(self):
+        return self._res.fetchone()
+
+    def copy_expert(self, sql, stream):
+        import re
+
+        table = re.match(r'COPY ("(?:[^"]|"")+")', sql).group(1)
+        rows = decode_copy_binary(stream.read(), self.conn.schema)
+        ph = ", ".join(["?"] * len(self.conn.schema))
+        self.conn.con.executemany(f"INSERT INTO {table} VALUES ({ph})", rows)
+
+
+class _DuckPgConn(_RecordingConn):
+    """A psycopg2-shaped connection over DuckDB: each COPY stream is
+    decoded with the independent PGCOPY decoder and inserted as rows."""
+
+    def __init__(self, path, schema):
+        import duckdb
+
+        super().__init__([])
+        self.con = duckdb.connect(path)
+        self.schema = schema
+
+    def cursor(self):
+        return _DuckPgCursor(self)
+
+    def close(self):
+        self.con.close()
+
+
+def test_verify_copy_stages_and_runs_the_sql_rules(spark, tmp_path, sf_dir):
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from cdf_spark.package.pg_copy import PsycopgTransport
+    from cdf_spark.sources.base import WriteDisposition
+
+    pkg = _make_package(spark, tmp_path, sf_dir)
+    schema = pq.read_schema(f"{sf_dir}/nation.parquet")
+    db = str(tmp_path / "pg.duckdb")
+    dest = PostgresCopyDestination(
+        transport_factory=lambda: PsycopgTransport(_DuckPgConn(db, schema)),
+        table="nation_tgt",
+        merge_keys=["n_nationkey"],
+        unlogged_stage=False,
+    )
+    for d in (WriteDisposition.REPLACE, WriteDisposition.MERGE):
+        assert dest.verify(spark, dest.commit(spark, pkg, d), pkg).verified
+    receipt = dest.commit(spark, pkg, WriteDisposition.REPLACE)
+    con = duckdb.connect(db)
+    con.execute("DELETE FROM nation_tgt WHERE n_nationkey = 3")
+    con.close()
+    assert not dest.verify(spark, receipt, pkg).verified
+
+
 # ---------------------------------------------------------------------------
 # distributed staging (foreachPartition on executors)
 

@@ -91,6 +91,23 @@ def test_observed_get_raises_instead_of_hanging(spark):
     with pytest.raises(RuntimeError, match="did not fire"):
         observed_get(obs, timeout_s=0.3)
 
+    class _BrokenAccessor:
+        """The JVM accessor throws; the blocking get must not be reached."""
+
+        _name = "broken"
+
+        class _jo:
+            @staticmethod
+            def getRowOrEmpty():
+                raise RuntimeError("py4j: accessor gone")
+
+        @property
+        def get(self):
+            pytest.fail("observed_get fell back to the blocking Observation.get")
+
+    with pytest.raises(RuntimeError, match="'broken'.*accessor failed"):
+        observed_get(_BrokenAccessor(), timeout_s=0.3)
+
 
 def test_funnel_and_cohort_value_identity_across_gate(spark, gate):
     """The gated operators (funnel_counts, funnel_conversion_stats,
