@@ -20,14 +20,16 @@ map-side-combined groupBy over a 3-value key.
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import dataclass
 from datetime import datetime
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..expressions.lowering import lower
+from ..plans.checkpoint import observed_get
 from ..types.arrow_types import parse_arrow_type
 from .policy import (
     VERDICT_FREEZE,
@@ -101,15 +103,13 @@ class ContractResult:
         """Quarantine-row count captured for free by the first action
         that ran over `admitted`/`annotated` (the CollectMetrics node
         sits below the verdict filter, so every contract-evaluated row
-        passes through it). ONLY call after such an action — the
-        underlying Observation.get blocks until one has run. Returns
-        None when no observation is attached."""
+        passes through it). ONLY call after such an action; the wait
+        is bounded by `observed_get`, and a failing read raises, naming
+        the observation. Returns None when no observation is
+        attached."""
         if self.observation is None:
             return None
-        try:
-            return int(self.observation.get["quarantine_rows"])
-        except Exception:
-            return None
+        return int(observed_get(self.observation)["quarantine_rows"])
 
     def summary(self) -> DataFrame:
         """Verdict summary: counts per verdict (map-side combined)."""
@@ -235,9 +235,7 @@ def evaluate_contract(
     # pushed through CollectMetrics, so the counts see every row.
     obs = None
     if observe:
-        from pyspark.sql import Observation
-
-        obs = Observation()
+        obs = Observation(f"contract-quarantine-{uuid.uuid4().hex[:8]}")
         base = base.observe(
             obs,
             F.count(F.when(F.col(rank_col) >= VERDICT_RANK[VERDICT_QUARANTINE], 1)).alias(

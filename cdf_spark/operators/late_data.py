@@ -19,10 +19,17 @@ comparison is plain `col <= lit(watermark)` so any ordered type works.
 
 from __future__ import annotations
 
+import shutil
+import uuid
 from dataclasses import dataclass
+from pathlib import Path
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from ..contracts.evaluator import VERDICT_COL, VERDICT_QUARANTINE, VIOLATIONS_COL
+from ..package.stats import parquet_row_count
+from ..plans.checkpoint import observed_get
 
 LATE_COL = "_cdf_late"
 
@@ -33,6 +40,40 @@ class LateDataSplit:
     recaptured: DataFrame | None
     quarantined: DataFrame | None
     admitted_annotated: DataFrame  # on-time ∪ (late if action=annotate), with _cdf_late
+    observation: Observation | None = None  # late-row count over every classified row
+
+    def observed_late_count(self) -> int | None:
+        """Late-row count captured by the first action over any frame
+        of this split (the CollectMetrics node sits below the on-time
+        filter, so every classified row passes through it). ONLY call
+        after such an action; the wait is bounded by `observed_get`.
+        Returns None when no observation is attached."""
+        if self.observation is None:
+            return None
+        return int(observed_get(self.observation)["late_rows"])
+
+    def quarantine_evidence(self) -> DataFrame:
+        """The late rows in the contract's quarantine shape: verdict
+        `quarantine`, violation `late_data` — evidence that joins the
+        package's quarantine segment, not a drop."""
+        return (
+            self.quarantined.drop(LATE_COL)
+            .withColumn(VERDICT_COL, F.lit(VERDICT_QUARANTINE))
+            .withColumn(VIOLATIONS_COL, F.array(F.lit("late_data")))
+        )
+
+    def persist_recaptured(self, carryover_dir: Path) -> int:
+        """Replace the carryover set at `carryover_dir` with this
+        split's recaptured rows (the previous set was unioned into the
+        classified frame by the caller); returns their count, read
+        from the written footers."""
+        staging = carryover_dir.with_name(carryover_dir.name + ".staging")
+        self.recaptured.write.mode("overwrite").parquet(str(staging))
+        rows = parquet_row_count(staging)
+        if carryover_dir.exists():
+            shutil.rmtree(carryover_dir)
+        staging.rename(carryover_dir)
+        return rows
 
 
 def classify_late_data(
@@ -46,7 +87,11 @@ def classify_late_data(
     ``watermark_value`` may be a scalar (the stored ledger value) or a
     Column already present on ``df`` (e.g. a broadcast-joined 1-row
     aggregate) — the Column form keeps a derived watermark inside one
-    lazy plan instead of forcing a driver-side collect."""
+    lazy plan instead of forcing a driver-side collect.
+
+    ``action="quarantine"`` attaches a CollectMetrics node counting late
+    rows (read with `LateDataSplit.observed_late_count`), so a pipeline
+    learns the count from the package write instead of a `count()`."""
     if action not in ("recapture", "quarantine", "annotate"):
         raise ValueError(f"unknown late-data action {action!r}")
 
@@ -55,6 +100,10 @@ def classify_late_data(
     wm = watermark_value if isinstance(watermark_value, Column) else F.lit(watermark_value)
     is_late = F.col(event_col) <= wm
     annotated = df.withColumn(LATE_COL, F.coalesce(is_late, F.lit(False)))
+    obs = None
+    if action == "quarantine":
+        obs = Observation(f"late-rows-{uuid.uuid4().hex[:8]}")
+        annotated = annotated.observe(obs, F.count_if(F.col(LATE_COL)).alias("late_rows"))
     on_time = annotated.filter(~F.col(LATE_COL))
     late = annotated.filter(F.col(LATE_COL))
 
@@ -71,6 +120,7 @@ def classify_late_data(
             recaptured=None,
             quarantined=late,
             admitted_annotated=on_time,
+            observation=obs,
         )
     return LateDataSplit(
         on_time=on_time.drop(LATE_COL),

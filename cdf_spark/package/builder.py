@@ -78,8 +78,9 @@ class PackageBuilder:
         passes of their own.
 
         ``quarantine_count_hint``: zero-arg callable returning the
-        quarantine-row count observed during the data write (e.g.
-        ContractResult.observed_quarantine_count). When it reports 0,
+        quarantine-row count observed during the data write (the load
+        pipelines sum ContractResult.observed_quarantine_count and
+        LateDataSplit.observed_late_count). When it reports 0,
         the quarantine-segment job — a full recompute of the upstream
         chain — is skipped: the batch is proven clean by the same pass
         that wrote the data."""

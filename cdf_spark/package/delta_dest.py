@@ -157,7 +157,7 @@ class DeltaDestination:
         return Receipt.issue(package, disposition, f"delta://{self.table_path}")
 
     def verify(self, spark: SparkSession, receipt: Receipt, package: PackageResult) -> Receipt:
-        return verify_frame(spark, receipt, package, self.read(spark), self.merge_keys)
+        return verify_frame(spark, receipt, package, lambda: self.read(spark), self.merge_keys)
 
     def read(self, spark: SparkSession):
         return DeltaTable(self.table_path).read(spark)

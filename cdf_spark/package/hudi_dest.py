@@ -480,7 +480,7 @@ class HudiDestination:
                 shutil.rmtree(r, ignore_errors=True)
 
     def verify(self, spark: SparkSession, receipt: Receipt, package: PackageResult) -> Receipt:
-        return verify_frame(spark, receipt, package, self.read(spark), self.merge_keys)
+        return verify_frame(spark, receipt, package, lambda: self.read(spark), self.merge_keys)
 
     def read(self, spark: SparkSession):
         """The copy-on-write resolved current state — exactly what any

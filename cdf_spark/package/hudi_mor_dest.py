@@ -347,8 +347,8 @@ class HudiMorDestination:
         )
 
     def verify(self, spark: SparkSession, receipt: Receipt, package: PackageResult) -> Receipt:
-        df = self.read(spark)
         if receipt.disposition == WriteDisposition.CDC_APPLY.value:
+            df = self.read(spark)
             staged = spark.read.parquet(package.data_path())
             ups = staged.filter(F.col(self.cdc_op_col) != "delete")
             dels = staged.filter(F.col(self.cdc_op_col) == "delete")
@@ -360,7 +360,7 @@ class HudiMorDestination:
             ok = ok and dels.join(df, on=cond_d, how="left_semi").isEmpty()
             receipt.verified = bool(ok)
             return receipt
-        return verify_frame(spark, receipt, package, df, [self.record_key])
+        return verify_frame(spark, receipt, package, lambda: self.read(spark), [self.record_key])
 
     def read(self, spark: SparkSession):
         """The merge-on-read SNAPSHOT — base files + pending log blocks

@@ -335,7 +335,7 @@ class IcebergDestination:
             if receipt.verified:
                 t.fast_forward(self.stage_branch)
             return receipt
-        return verify_frame(spark, receipt, package, self.read(spark), self.merge_keys)
+        return verify_frame(spark, receipt, package, lambda: self.read(spark), self.merge_keys)
 
     def read(self, spark: SparkSession):
         """The merge-on-read resolved current state — exactly what any

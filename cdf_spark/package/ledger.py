@@ -26,6 +26,7 @@ from __future__ import annotations
 import json
 import time
 import uuid
+from collections.abc import Callable
 from dataclasses import asdict, dataclass, field
 from functools import reduce
 from pathlib import Path
@@ -35,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..sources.base import WriteDisposition
 from .builder import PackageResult
-from .stats import dataset_value_hash
+from .stats import dataset_value_hash, parquet_row_count
 
 
 @dataclass
@@ -69,18 +70,23 @@ def verify_frame(
     spark: SparkSession,
     receipt: Receipt,
     package: PackageResult | None,
-    table: DataFrame,
+    read: Callable[[], DataFrame],
     keys: list[str],
+    count: Callable[[], int] | None = None,
 ) -> Receipt:
     """Receipt verification for every destination Spark reads back as
-    one frame (`table`: the destination's current state).
+    one frame (`read()`: the destination's current state, built only
+    by the rules that need it).
 
-    - REPLACE: `table` hashes to the package's value hash.
-    - MERGE: every staged key is present in `table` (a null-safe
+    - REPLACE: `read()` hashes to the package's value hash.
+    - MERGE: every staged key is present in `read()` (a null-safe
       `left_anti` join from the package segments returns no rows).
     - APPEND with keys: the same key containment as MERGE.
-    - APPEND without keys: `table.count() >= rows_written`. This path
-      reads neither `package` nor its segments.
+    - APPEND without keys: `count() >= rows_written`. `count` defaults
+      to `read().count()`; a destination that can count its rows
+      without Spark passes its own (Parquet: a footer count, O(files)
+      driver time and no Spark job). This path reads neither `package`
+      nor its segments.
 
     Two known gaps. The keyless APPEND bound is true of any package no
     larger than the table, so it does not prove *this* package landed.
@@ -89,13 +95,15 @@ def verify_frame(
     """
     d = WriteDisposition(receipt.disposition)
     if d is WriteDisposition.REPLACE:
-        ok = dataset_value_hash(table) == package.value_hash
+        ok = dataset_value_hash(read()) == package.value_hash
     elif keys and d in (WriteDisposition.MERGE, WriteDisposition.APPEND):
+        table = read()
         staged = spark.read.parquet(package.data_path())
         cond = reduce(lambda a, b: a & b, [staged[k].eqNullSafe(table[k]) for k in keys])
         ok = staged.join(table, on=cond, how="left_anti").isEmpty()
     elif d is WriteDisposition.APPEND:
-        ok = table.count() >= receipt.rows_written
+        rows = count() if count is not None else read().count()
+        ok = rows >= receipt.rows_written
     else:
         raise ValueError(f"cannot verify a {d.value} receipt without merge keys")
     receipt.verified = bool(ok)
@@ -191,7 +199,10 @@ class ParquetDestination:
             shutil.rmtree(old)
 
     def verify(self, spark: SparkSession, receipt: Receipt, package: PackageResult) -> Receipt:
-        return verify_frame(spark, receipt, package, self.read(spark), self.merge_keys)
+        return verify_frame(
+            spark, receipt, package, lambda: self.read(spark), self.merge_keys,
+            count=lambda: parquet_row_count(self.table_path),
+        )
 
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(str(self.table_path))

@@ -220,4 +220,4 @@ class TombstoneParquetDestination:
 
     # -- verification ----------------------------------------------------
     def verify(self, spark: SparkSession, receipt: Receipt, package: PackageResult) -> Receipt:
-        return verify_frame(spark, receipt, package, self.read(spark), self.merge_keys)
+        return verify_frame(spark, receipt, package, lambda: self.read(spark), self.merge_keys)

@@ -185,12 +185,11 @@ class LoadPipeline:
         # run re-reads (LateDataCarryoverRef parity with
         # streaming/pipeline.py).
         rows_late = 0
+        counts = []  # observed quarantine counts, read after the data write
+        if cres is not None:
+            counts.append(cres.observed_quarantine_count)
+        late_split = None
         if self.watermark_column is not None and self.watermark_value is not None:
-            from pyspark.sql import functions as F
-
-            from .contracts.evaluator import VERDICT_COL, VERDICT_QUARANTINE, VIOLATIONS_COL
-            from .operators.late_data import LATE_COL
-
             carry_root = Path(self.ledger.root) if self.ledger is not None else Path(self.package_root)
             carryover_dir = carry_root / "carryover" / desc.resource_id
             if self.late_action == "recapture" and carryover_dir.exists():
@@ -201,46 +200,28 @@ class LoadPipeline:
 
             split = classify_late_data(df, self.watermark_column, self.watermark_value, self.late_action)
             if self.late_action == "quarantine":
-                late = (
-                    split.quarantined.drop(LATE_COL)
-                    .withColumn(VERDICT_COL, F.lit(VERDICT_QUARANTINE))
-                    .withColumn(VIOLATIONS_COL, F.array(F.lit("late_data")))
-                )
-                rows_late = late.count()
+                late = split.quarantine_evidence()
                 quarantined = (
                     late
                     if quarantined is None
                     else quarantined.unionByName(late, allowMissingColumns=True)
                 )
+                late_split = split
+                counts.append(split.observed_late_count)
                 df = split.on_time
             elif self.late_action == "recapture":
                 # persist for the NEXT run; replace the previous
                 # carryover set (those rows rejoined `df` above)
-                staging = carryover_dir.with_name(carryover_dir.name + ".staging")
-                split.recaptured.write.mode("overwrite").parquet(str(staging))
-                rows_late = spark.read.parquet(str(staging)).count()
-                import shutil as _shutil
-
-                if carryover_dir.exists():
-                    _shutil.rmtree(carryover_dir)
-                carryover_dir.parent.mkdir(parents=True, exist_ok=True)
-                staging.rename(carryover_dir)
+                rows_late = split.persist_recaptured(carryover_dir)
                 df = split.on_time
             else:
                 df = split.admitted_annotated
-            _trace("late_classified", action=self.late_action, rows_late=rows_late)
+            _trace("late_classified", action=self.late_action)
 
         # 6. package (cursor frontier reuses the package's own stats
-        # pass instead of a separate max() job; the contract's
-        # observation lets the builder skip the quarantine job on clean
-        # batches — but only when nothing beyond the contract fed the
-        # quarantine frame)
-        late_in_quarantine = self.late_action == "quarantine" and rows_late > 0
-        hint = (
-            cres.observed_quarantine_count
-            if (cres is not None and not late_in_quarantine)
-            else None
-        )
+        # pass instead of a separate max() job; the contract and late
+        # observations let the builder skip the quarantine job on clean
+        # batches)
         builder = PackageBuilder(
             self.package_root, desc.resource_id, compression=self.package_compression
         )
@@ -250,8 +231,10 @@ class LoadPipeline:
             scan_plan=scan_plan,
             contract=self.contract,
             trace=trace,
-            quarantine_count_hint=hint,
+            quarantine_count_hint=lambda: sum(c() for c in counts),
         )
+        if late_split is not None:
+            rows_late = late_split.observed_late_count()
         _trace("package_built", package_id=package.package_id, rows=package.rows_admitted)
         new_position = None
         if desc.cursor:

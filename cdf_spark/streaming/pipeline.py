@@ -2,10 +2,22 @@
 
 The streaming analogue of :class:`cdf_spark.runtime.LoadPipeline`
 (§3.1 step 7 of SURVEY): `readStream` -> per-micro-batch (epoch)
-contract evaluation, dedup-within-epoch, late-data split against the
-engine watermark ledger -> package build -> destination commit ->
-receipt verify -> checkpoint advance -- all inside `foreachBatch`, so
-each epoch is one transactional unit with an auditable package.
+steps, all inside `foreachBatch`, so each epoch is one transactional
+unit with an auditable package:
+
+  1. observe max(watermark column) on the raw batch
+  2. contract evaluation (observes the quarantine count)
+  3. dedup within the epoch
+  4. late-data split against the watermark ledger (observes the late
+     count; recaptured rows are written to the carryover set)
+  5. package build: ONE data write computes steps 1-4 and every
+     observed scalar; the quarantine segment is written only when the
+     observed counts are non-zero
+  6. destination commit -> receipt verify -> checkpoint advance
+  7. watermark advance to the observed frontier, only after the
+     receipt verifies (or when there is nothing to commit)
+
+No step runs a Spark action just to read a count or a max.
 
 Why engine-side watermarks instead of `withWatermark`: Spark's
 watermark silently DROPS late rows and only supports timestamps; the
@@ -27,20 +39,28 @@ flat file (write to a staging dir, move the part file in).
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..contracts.evaluator import evaluate_contract
 from ..contracts.policy import Contract
 from ..operators.dedup import dedup_keyed
 from ..operators.late_data import classify_late_data
 from ..package.builder import PackageBuilder
-from ..package.ledger import CheckpointLedger, ParquetDestination
+from ..package.ledger import CheckpointLedger
+from ..plans.checkpoint import observed_get
 from ..sources.base import ResourceDescriptor, WriteDisposition
 from .epochs import DrainState, DrainTermination, EpochPolicy, StreamExtent
-from .watermark import WatermarkLedger, WatermarkPolicy, observed_frontier
+from .watermark import (
+    WatermarkLedger,
+    WatermarkPolicy,
+    frontier_from_max,
+    parse_stored_watermark,
+)
 
 
 @dataclass
@@ -115,18 +135,27 @@ class StreamingLoadPipeline:
             return
 
         df = batch_df
+        wm_obs = None
+        if self.watermark is not None:
+            # the frontier this batch supports rides the package's data
+            # write: a CollectMetrics node at the bottom of the plan sees
+            # every batch row, so no separate max() job is run
+            wm_obs = Observation(f"wm-frontier-{uuid.uuid4().hex[:8]}")
+            df = df.observe(wm_obs, F.max(self.watermark.column).alias("max"))
+
         quarantined = None
-        cres = None
+        counts = []  # observed quarantine counts, read after the data write
         if self.contract:
             cres = evaluate_contract(df, self.contract, observe=True)
             df, quarantined = cres.admitted, cres.quarantined
+            counts.append(cres.observed_quarantine_count)
 
         if desc.dedup_keys:
             order = [desc.cursor.field] if desc.cursor else desc.primary_key or desc.dedup_keys
             df = dedup_keyed(df, desc.dedup_keys, order, keep=desc.dedup_keep)
 
         rows_late = 0
-        wm_after = None
+        late_split = None
         if self.watermark is not None:
             # recaptured rows from the previous epoch rejoin the batch
             # (LateDataCarryoverRef parity): they are re-presented to
@@ -140,76 +169,63 @@ class StreamingLoadPipeline:
 
             current = wm_ledger.current(self.watermark.column)
             if current is not None:
-                from .watermark import parse_stored_watermark
-
                 dtype = dict(df.dtypes).get(self.watermark.column, "")
                 wm_value = parse_stored_watermark(current, dtype)
                 split = classify_late_data(df, self.watermark.column, wm_value, self.late_action)
                 if self.late_action == "quarantine":
-                    from pyspark.sql import functions as F
-
-                    from ..contracts.evaluator import (
-                        VERDICT_COL,
-                        VERDICT_QUARANTINE,
-                        VIOLATIONS_COL,
-                    )
-                    from ..operators.late_data import LATE_COL
-
-                    late = (
-                        split.quarantined.drop(LATE_COL)
-                        .withColumn(VERDICT_COL, F.lit(VERDICT_QUARANTINE))
-                        .withColumn(VIOLATIONS_COL, F.array(F.lit("late_data")))
-                    )
-                    rows_late = late.count()
                     # evidence, not a drop: late rows join the package's
                     # quarantine segment alongside contract rejections
+                    late = split.quarantine_evidence()
                     quarantined = (
                         late
                         if quarantined is None
                         else quarantined.unionByName(late, allowMissingColumns=True)
                     )
+                    late_split = split
+                    counts.append(split.observed_late_count)
                     df = split.on_time
                 elif self.late_action == "recapture":
                     # persist for the NEXT epoch; replace the previous
                     # carryover set (those rows are in `df` already)
-                    staging = carryover_dir.with_name(carryover_dir.name + ".staging")
-                    split.recaptured.write.mode("overwrite").parquet(str(staging))
-                    recaptured = spark.read.parquet(str(staging))
-                    rows_late = recaptured.count()
-                    import shutil as _shutil
-
-                    if carryover_dir.exists():
-                        _shutil.rmtree(carryover_dir)
-                    staging.rename(carryover_dir)
+                    rows_late = split.persist_recaptured(carryover_dir)
                     df = split.on_time
                 else:
                     df = split.admitted_annotated
-            frontier = observed_frontier(batch_df, self.watermark)
-            if frontier is not None:
-                wm_after = wm_ledger.advance(self.watermark.column, frontier)
 
-        late_in_quarantine = self.late_action == "quarantine" and rows_late > 0
-        hint = (
-            cres.observed_quarantine_count
-            if (cres is not None and not late_in_quarantine)
-            else None
-        )
         builder = PackageBuilder(self.package_root, desc.resource_id)
         package = builder.build(
             admitted=df,
             quarantined=quarantined,
             contract=self.contract,
-            quarantine_count_hint=hint,
+            # a clean epoch (no contract rejections, no late rows) skips
+            # the quarantine job
+            quarantine_count_hint=lambda: sum(c() for c in counts),
         )
+        if late_split is not None:
+            rows_late = late_split.observed_late_count()
 
         receipt_verified = False
-        if self.destination is not None and package.rows_admitted > 0:
+        commits = self.destination is not None and package.rows_admitted > 0
+        if commits:
             receipt = self.destination.commit(spark, package, self.disposition)
             receipt = self.destination.verify(spark, receipt, package)
             receipt_verified = receipt.verified
             ck_ledger.record_receipt(receipt)
             if receipt.verified:
                 ck_ledger.advance(desc.resource_id, receipt, {"epoch": epoch_id})
+
+        # the watermark advances only once the epoch is delivered: an
+        # epoch whose receipt fails must not move it past rows that may
+        # be replayed
+        wm_after = None
+        if wm_obs is not None and (receipt_verified or not commits):
+            frontier = frontier_from_max(
+                observed_get(wm_obs)["max"],
+                dict(batch_df.dtypes)[self.watermark.column],
+                self.watermark,
+            )
+            if frontier is not None:
+                wm_after = wm_ledger.advance(self.watermark.column, frontier)
 
         self.epochs.append(
             EpochResult(

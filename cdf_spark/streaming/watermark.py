@@ -50,23 +50,28 @@ class WatermarkPolicy:
             raise ValueError("minimum_eligible requires idle_after_ms")
 
 
+def frontier_from_max(max_value, dtype: str, policy: WatermarkPolicy):
+    """max(event_col) - delay: the candidate watermark a batch whose
+    event column (Spark type string `dtype`) peaks at `max_value`
+    supports. None when the column held no value."""
+    if max_value is None:
+        return None
+    if dtype.startswith(("timestamp", "date")):
+        import datetime
+
+        return max_value - datetime.timedelta(seconds=policy.delay)
+    return max_value - policy.delay
+
+
 def observed_frontier(df: DataFrame, policy: WatermarkPolicy):
-    """max(event_col) - delay over a (micro)batch — the candidate
-    watermark this batch supports. Numeric and temporal domains."""
+    """The candidate watermark `df` supports, from one 1-row aggregate
+    job. For a standalone frame; the streaming epoch instead observes
+    the max on its package's data write and calls `frontier_from_max`."""
     dt = dict(df.dtypes).get(policy.column)
     if dt is None:
         raise KeyError(f"watermark column {policy.column!r} missing")
-    # driver-side by design: the frontier is ledger state that must be
-    # materialized to persist; one map-side-combined 1-row agg per
-    # (micro)batch, not a per-row round trip
     mx = df.agg(F.max(policy.column).alias("m")).collect()[0].m
-    if mx is None:
-        return None
-    if dt.startswith(("timestamp", "date")):
-        import datetime
-
-        return mx - datetime.timedelta(seconds=policy.delay)
-    return mx - policy.delay
+    return frontier_from_max(mx, dt, policy)
 
 
 def combine_partition_watermarks(

@@ -83,7 +83,15 @@ def test_pinned_scalars_identical_in_both_modes(spark, gate, tmp_path):
 
 
 def test_observed_get_raises_instead_of_hanging(spark):
+    """`observed_get` raises, naming the observation, when the metric
+    never fires or the JVM accessor throws. The contract's quarantine
+    count and the late-data split's late count read through it, so a
+    failing accessor raises there too instead of turning into None
+    (which would silently force the quarantine job) or hanging."""
     from pyspark.sql import Observation
+
+    from cdf_spark.contracts.evaluator import ContractResult
+    from cdf_spark.operators.late_data import LateDataSplit
 
     obs = Observation()
     # observed but never acted on: the metric can never fire
@@ -94,7 +102,8 @@ def test_observed_get_raises_instead_of_hanging(spark):
     class _BrokenAccessor:
         """The JVM accessor throws; the blocking get must not be reached."""
 
-        _name = "broken"
+        def __init__(self, name):
+            self._name = name
 
         class _jo:
             @staticmethod
@@ -106,7 +115,16 @@ def test_observed_get_raises_instead_of_hanging(spark):
             pytest.fail("observed_get fell back to the blocking Observation.get")
 
     with pytest.raises(RuntimeError, match="'broken'.*accessor failed"):
-        observed_get(_BrokenAccessor(), timeout_s=0.3)
+        observed_get(_BrokenAccessor("broken"), timeout_s=0.3)
+    cres = ContractResult(None, None, None, observation=_BrokenAccessor("contract-quarantine-x"))
+    with pytest.raises(RuntimeError, match="'contract-quarantine-x'.*accessor failed"):
+        cres.observed_quarantine_count()
+    split = LateDataSplit(None, None, None, None, observation=_BrokenAccessor("late-rows-x"))
+    with pytest.raises(RuntimeError, match="'late-rows-x'.*accessor failed"):
+        split.observed_late_count()
+    # no observation attached: no count, no wait
+    assert ContractResult(None, None, None).observed_quarantine_count() is None
+    assert LateDataSplit(None, None, None, None).observed_late_count() is None
 
 
 def test_funnel_and_cohort_value_identity_across_gate(spark, gate):

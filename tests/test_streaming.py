@@ -583,3 +583,216 @@ def test_sliding_window_drain_matches_batch(spark, tmp_path):
         for r in agg(spark.createDataFrame(rows, schema)).collect()
     }
     assert drained == batch and len(batch) > 4
+
+
+# ---------------------------------------------------------------------------
+# One pass per epoch: the late count and the watermark frontier are
+# observed on the package's data write; the watermark advances only
+# after the receipt verifies
+
+
+def _epoch_pipe(tmp_path, destination="parquet", **kw):
+    """A pipeline driven one epoch at a time through `_process_epoch`
+    with a static batch (the foreachBatch contract, no stream)."""
+    opts = dict(
+        descriptor=ResourceDescriptor("ep", primary_key=["event_id"], dedup_keys=["event_id"]),
+        source_path=str(tmp_path / "unused"),
+        schema=EVENT_SCHEMA,
+        contract=Contract(rules=[RangeRule("value", min=0.0, max=1e9)]),
+        watermark=WatermarkPolicy("seq", delay=20),
+        late_action="quarantine",
+        package_root=str(tmp_path / "pkgs"),
+        ledger_root=str(tmp_path / "ledger"),
+        destination=ParquetDestination(tmp_path / "dest") if destination == "parquet" else destination,
+    )
+    opts.update(kw)
+    return StreamingLoadPipeline(**opts)
+
+
+def _batch(spark, rows, schema=EVENT_SCHEMA):
+    return spark.createDataFrame(rows, schema)
+
+
+def test_observed_late_count_and_frontier_equal_the_old_actions(spark, tmp_path):
+    from cdf_spark.contracts.evaluator import evaluate_contract
+    from cdf_spark.operators.late_data import classify_late_data
+
+    pipe = _epoch_pipe(tmp_path)
+    pipe._process_epoch(_batch(spark, [(i, i * 10, float(i)) for i in range(1, 21)]), 0)
+    assert pipe.epochs[0].watermark_after == 180
+
+    # seq <= 180 is late: 3 late rows (one of them also a contract
+    # rejection), 1 on-time contract rejection, 2 on-time clean rows
+    rows = [(100, 150, 1.0), (101, 170, 1.0), (104, 160, -1.0),
+            (102, 210, 1.0), (103, 260, 1.0), (105, 230, -5.0)]
+    batch = _batch(spark, rows)
+    cres = evaluate_contract(batch, pipe.contract)
+    old_late = classify_late_data(cres.admitted, "seq", 180, "quarantine").quarantined.count()
+    old_frontier = observed_frontier(batch, pipe.watermark)
+    assert (old_late, old_frontier) == (2, 240)
+
+    pipe._process_epoch(batch, 1)
+    ep = pipe.epochs[1]
+    assert ep.rows_late == old_late
+    assert ep.watermark_after == old_frontier
+    assert ep.rows_admitted == 2 and ep.receipt_verified
+    assert ep.rows_quarantined == 2 + 2  # contract rejections + late rows
+    quar = spark.read.parquet(str(tmp_path / "pkgs" / ep.package_id / "quarantine"))
+    assert quar.filter(F.array_contains("_cdf_violations", "late_data")).count() == old_late
+
+
+def test_clean_epoch_writes_no_quarantine_segment(spark, tmp_path):
+    pipe = _epoch_pipe(tmp_path)
+    pipe._process_epoch(_batch(spark, [(i, i * 10, float(i)) for i in range(1, 11)]), 0)
+    # second epoch: every row on time and inside the contract
+    pipe._process_epoch(_batch(spark, [(50, 500, 1.0), (51, 510, 2.0)]), 1)
+    for ep in pipe.epochs:
+        assert ep.rows_quarantined == 0 and ep.rows_late == 0 and ep.receipt_verified
+        assert not (tmp_path / "pkgs" / ep.package_id / "quarantine").exists()
+    assert pipe.epochs[1].watermark_after == 490
+
+
+def test_all_null_event_column_leaves_the_watermark_untouched(spark, tmp_path):
+    pipe = _epoch_pipe(tmp_path)
+    pipe._process_epoch(_batch(spark, [(1, 100, 1.0), (2, 200, 1.0)]), 0)
+    ledger = WatermarkLedger(tmp_path / "ledger", "ep")
+    assert ledger.current("seq") == 180
+    history = len(ledger.state["history"])
+
+    pipe._process_epoch(_batch(spark, [(3, None, 1.0), (4, None, 2.0)]), 1)
+    ep = pipe.epochs[1]
+    assert ep.watermark_after is None
+    assert ep.rows_admitted == 2 and ep.rows_late == 0 and ep.receipt_verified
+    ledger = WatermarkLedger(tmp_path / "ledger", "ep")
+    assert ledger.current("seq") == 180
+    assert len(ledger.state["history"]) == history
+
+    # the very first epoch with no event values: no watermark at all
+    fresh = _epoch_pipe(tmp_path / "fresh")
+    fresh._process_epoch(_batch(spark, [(5, None, 1.0)]), 0)
+    assert fresh.epochs[0].watermark_after is None
+    assert WatermarkLedger(tmp_path / "fresh" / "ledger", "ep").current("seq") is None
+
+
+@pytest.mark.parametrize(
+    "column, delay, first, second",
+    [
+        ("value", 0.5, [(1, 1, 1.0), (2, 2, 4.0)], [(3, 3, 3.0), (4, 4, 9.25)]),
+        (
+            "ts",
+            60.0,
+            [(1, 1, datetime.datetime(2026, 1, 1, 12, 0)), (2, 2, datetime.datetime(2026, 1, 1, 13, 0))],
+            [(3, 3, datetime.datetime(2026, 1, 1, 12, 30)), (4, 4, datetime.datetime(2026, 1, 2, 0, 0))],
+        ),
+    ],
+)
+def test_observed_frontier_in_numeric_and_temporal_domains(spark, tmp_path, column, delay, first, second):
+    schema = "event_id long, seq long, value double" if column == "value" else "event_id long, seq long, ts timestamp"
+    pipe = _epoch_pipe(tmp_path, contract=None, watermark=WatermarkPolicy(column, delay=delay))
+    for epoch_id, rows in enumerate((first, second)):
+        batch = spark.createDataFrame(rows, schema)
+        pipe._process_epoch(batch, epoch_id)
+        assert pipe.epochs[-1].watermark_after is not None
+        stored = WatermarkLedger(tmp_path / "ledger", "ep").current(column)
+        assert stored == pipe.epochs[-1].watermark_after
+        frontier = observed_frontier(batch, pipe.watermark)
+        assert stored == (frontier.isoformat() if column == "ts" else frontier)
+    # the first epoch's frontier made exactly one second-epoch row late
+    assert pipe.epochs[1].rows_late == 1 and pipe.epochs[1].rows_admitted == 1
+
+
+def test_unverified_receipt_leaves_watermark_and_checkpoint_unchanged(spark, tmp_path):
+    from cdf_spark.package.ledger import CheckpointLedger
+
+    class _Unverified(ParquetDestination):
+        def verify(self, spark, receipt, package):
+            receipt.verified = False
+            return receipt
+
+    pipe = _epoch_pipe(tmp_path)
+    pipe._process_epoch(_batch(spark, [(1, 100, 1.0), (2, 200, 1.0)]), 0)
+    checkpoint = CheckpointLedger(tmp_path / "ledger").latest("ep")
+    assert checkpoint is not None and WatermarkLedger(tmp_path / "ledger", "ep").current("seq") == 180
+
+    pipe.destination = _Unverified(tmp_path / "dest")
+    pipe._process_epoch(_batch(spark, [(3, 300, 1.0), (4, 400, 1.0)]), 1)
+    ep = pipe.epochs[1]
+    assert not ep.receipt_verified and ep.watermark_after is None
+    assert WatermarkLedger(tmp_path / "ledger", "ep").current("seq") == 180
+    assert CheckpointLedger(tmp_path / "ledger").latest("ep") == checkpoint
+    assert not CheckpointLedger(tmp_path / "ledger").epoch_committed("ep", 1)
+
+
+@pytest.mark.parametrize("disposition", ["append", "replace", "merge"])
+def test_footer_row_count_equals_spark_count(spark, tmp_path, disposition):
+    from cdf_spark.package.builder import PackageBuilder
+    from cdf_spark.package.stats import parquet_row_count
+
+    d = WriteDisposition(disposition)
+    dest = ParquetDestination(tmp_path / "dest", merge_keys=["event_id"] if d is WriteDisposition.MERGE else None)
+    builder = PackageBuilder(tmp_path / "pkgs", "fc")
+    for lo in (0, 5):
+        pkg = builder.build(_batch(spark, [(i, i, float(i)) for i in range(lo, lo + 8)]).repartition(3))
+        dest.commit(spark, pkg, d)
+    # siblings Spark's file index skips: job markers, checksums, temp dirs
+    (tmp_path / "dest" / "_SUCCESS").touch()
+    (tmp_path / "dest" / ".part-x.parquet.crc").write_bytes(b"\0" * 12)
+    (tmp_path / "dest" / "_temporary" / "0").mkdir(parents=True)
+    (tmp_path / "dest" / "_temporary" / "0" / "part-y.parquet").write_bytes(b"junk")
+    expected = {WriteDisposition.APPEND: 16, WriteDisposition.REPLACE: 8, WriteDisposition.MERGE: 13}[d]
+    assert parquet_row_count(tmp_path / "dest") == dest.read(spark).count() == expected
+
+
+def test_epoch_job_count_guard(spark, tmp_path, monkeypatch):
+    """A 2-epoch DRAIN (contract, quarantine watermark, dedup, APPEND
+    into a ParquetDestination) runs at most 5 Spark jobs per epoch: the
+    package's data write and, when something was rejected or late, the
+    quarantine write. The late count, the frontier and the keyless
+    APPEND verify ride those writes. Jobs are counted by a per-epoch
+    job tag through the status tracker."""
+    import os
+    import shutil
+    import uuid
+
+    sc = spark.sparkContext
+    run_tag = uuid.uuid4().hex[:8]
+    orig = StreamingLoadPipeline._process_epoch
+
+    def tagged(self, batch_df, epoch_id):
+        sc.addJobTag(f"epoch-guard-{run_tag}-{epoch_id}")
+        try:
+            return orig(self, batch_df, epoch_id)
+        finally:
+            sc.removeJobTag(f"epoch-guard-{run_tag}-{epoch_id}")
+
+    monkeypatch.setattr(StreamingLoadPipeline, "_process_epoch", tagged)
+
+    src = tmp_path / "in"
+    src.mkdir()
+    batches = [
+        # epoch 0: one contract rejection, no watermark yet
+        [(i, i * 10, float(i)) for i in range(1, 41)] + [(41, 410, -1.0)],
+        # epoch 1: two late rows (seq <= 390), one duplicate key
+        [(i, i * 10, float(i)) for i in range(50, 90)] + [(90, 100, 1.0), (91, 200, 1.0), (50, 505, 2.0)],
+    ]
+    for k, rows in enumerate(batches):
+        stage = tmp_path / f"stage{k}"
+        _batch(spark, rows).coalesce(1).write.parquet(str(stage))
+        (part,) = stage.glob("*.parquet")
+        shutil.move(str(part), str(src / f"b{k}.parquet"))
+        os.utime(src / f"b{k}.parquet", (1_000 + k, 1_000 + k))
+
+    pipe = _epoch_pipe(
+        tmp_path,
+        descriptor=ResourceDescriptor("guard", primary_key=["event_id"], dedup_keys=["event_id"]),
+        source_path=str(src),
+        reader_options={"maxFilesPerTrigger": 1},
+    )
+    epochs = pipe.run(spark)
+    assert [e.epoch_id for e in epochs] == [0, 1]
+    assert epochs[0].rows_quarantined == 1 and epochs[1].rows_late == 2
+    assert all(e.receipt_verified for e in epochs)
+
+    tracker = sc._jsc.sc().statusTracker()
+    jobs = [len(tracker.getJobIdsForTag(f"epoch-guard-{run_tag}-{e.epoch_id}")) for e in epochs]
+    assert all(1 <= n <= 5 for n in jobs), jobs
