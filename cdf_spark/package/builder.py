@@ -66,21 +66,18 @@ class PackageBuilder:
         quarantined: DataFrame | None = None,
         scan_plan: ScanPlan | None = None,
         contract: Contract | None = None,
-        positions: dict | None = None,
-        trace: list[dict] | None = None,
-        cache: bool = False,
         quarantine_count_hint=None,
     ) -> PackageResult:
         """The evidence pass (column stats + value hash) is computed
         DURING the segment write via Spark's Observation API — one scan
-        total for data + all evidence. ``cache`` is retained for
-        callers whose upstream chain is expensive AND who make extra
-        passes of their own.
+        total for data + all evidence. The load chain adds
+        ``state/positions.json`` and ``trace.jsonl`` at delivery
+        (`runtime.deliver_package`).
 
         ``quarantine_count_hint``: zero-arg callable returning the
-        quarantine-row count observed during the data write (the load
-        pipelines sum ContractResult.observed_quarantine_count and
-        LateDataSplit.observed_late_count). When it reports 0,
+        quarantine-row count observed during the data write
+        (`runtime.build_package` sums ContractResult.observed_quarantine_count
+        and LateDataSplit.observed_late_count). When it reports 0,
         the quarantine-segment job — a full recompute of the upstream
         chain — is skipped: the batch is proven clean by the same pass
         that wrote the data."""
@@ -88,8 +85,6 @@ class PackageBuilder:
 
         schema = CanonicalSchema.from_spark(admitted.schema)
         schema_fp = schema.fingerprint()
-        if cache:
-            admitted = admitted.persist()
         plan_hash = scan_plan.content_hash() if scan_plan else "none"
         contract_hash = contract.content_hash() if contract else "none"
 
@@ -175,8 +170,6 @@ class PackageBuilder:
 
         # evidence
         rows = stats["__table"]["rows"]
-        if cache:
-            admitted.unpersist()
         (pkg / "stats").mkdir(exist_ok=True)
         (pkg / "stats" / "column_stats.json").write_text(json.dumps(stats, indent=1, default=str))
         (pkg / "schema" / "schema.json").write_text(schema.canonical_json())
@@ -206,12 +199,6 @@ class PackageBuilder:
                 indent=1,
             )
         )
-        if positions:
-            (pkg / "state" / "positions.json").write_text(json.dumps(positions, indent=1, default=str))
-        if trace:
-            with open(pkg / "trace.jsonl", "w") as f:
-                for ev in trace:
-                    f.write(json.dumps(ev, default=str) + "\n")
 
         manifest = {
             "package_id": package_id,

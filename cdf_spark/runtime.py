@@ -1,4 +1,4 @@
-"""The load pipeline: the engine's `cdf run <resource>` equivalent.
+"""The load chain: the engine's `cdf run <resource>` equivalent.
 
 Re-expresses the reference's operator chain
 (`crates/cdf-engine/src/planning.rs:338-346`:
@@ -11,9 +11,19 @@ PackageSink`) and its execution orchestration
   2. execute declaratively (Catalyst owns pruning/pushdown)
   3. contract transforms + rules -> verdict lattice splits
   4. keyed dedup under the declared package order
-  5. late-data classification against the stored watermark
+  5. late-data classification against the watermark
   6. package build (segments + stats + manifests, hash-addressed)
   7. destination commit -> receipt -> verify -> checkpoint advance
+
+Steps 3-7 exist once, as two functions every load calls:
+`build_package` (3-6) and `deliver_package` (7). A bounded load
+(`LoadPipeline`) runs steps 1-2 and passes a fixed watermark; a stream
+epoch (`streaming.pipeline.StreamingLoadPipeline`) passes its
+micro-batch and the watermark ledger's value. The package's ONE data
+write computes steps 3-5 and every observed scalar (contract
+quarantine count, late count); the quarantine segment is written only
+when those counts are non-zero. No step runs a Spark action just to
+read a count or a max.
 
 Everything row-shaped is a DataFrame op (distributed, codegen'd); the
 control plane (negotiation, manifests, ledger) is driver-side JSON.
@@ -21,6 +31,8 @@ control plane (negotiation, manifests, ledger) is driver-side JSON.
 
 from __future__ import annotations
 
+import json
+import time
 from dataclasses import dataclass, field
 from datetime import datetime
 from pathlib import Path
@@ -34,7 +46,7 @@ from .operators.dedup import dedup_keyed
 from .operators.late_data import classify_late_data
 from .package.builder import PackageBuilder, PackageResult
 from .package.ledger import CheckpointLedger, ParquetDestination, Receipt
-from .plans.scan import ScanRequest
+from .plans.scan import ScanPlan, ScanRequest
 from .sources.base import ResourceDescriptor, WriteDisposition
 from .sources.files import FileResource
 
@@ -100,14 +112,8 @@ class LoadPipeline:
                 lease_mgr.release(lease)
 
     def _run_inner(self, spark: SparkSession, as_of: datetime | None = None) -> RunResult:
-        import time as _time
-
         desc: ResourceDescriptor = self.resource.descriptor
-        trace: list[dict] = []
-        _t0 = _time.perf_counter()
-
-        def _trace(step: str, **kv) -> None:
-            trace.append({"step": step, "at_s": round(_time.perf_counter() - _t0, 3), **kv})
+        trace = Trace()
 
         # 1-2. scan with cursor resume from the checkpoint ledger
         resume = None
@@ -124,28 +130,28 @@ class LoadPipeline:
             cursor_resume_value=resume,
         )
         df, scan_plan = self.resource.scan(spark, request)
-        _trace("scan_negotiated", plan_hash=scan_plan.content_hash(),
-               pushed=len(scan_plan.pushed), residual=len(scan_plan.residual))
+        trace("scan_negotiated", plan_hash=scan_plan.content_hash(),
+              pushed=len(scan_plan.pushed), residual=len(scan_plan.residual))
 
         # schema admission against the authority (SURVEY §1.3): the
         # observed scan schema must reconcile with the promoted head —
         # exact/widened/extra admit (extras feed variant capture),
         # drift refuses the run before any data moves.
         permit = None
-        authority = None
         if self.ledger is not None and desc.trust_level == "declared":
             from .types.authority import SchemaAuthority, SchemaDriftError
 
-            authority = SchemaAuthority(Path(self.ledger.root) / "schemas", desc.resource_id)
+            schemas = Path(self.ledger.root) / "schemas"
+            authority = SchemaAuthority(schemas, desc.resource_id)
             if authority.active() is None:
                 authority.promote(authority.propose(df.schema).version)
             admission = authority.admit(df.schema)
-            _trace("schema_admission", verdict=admission.verdict)
+            trace("schema_admission", verdict=admission.verdict)
             if self.settlement_run_id is not None:
                 permit = authority.acquire_permit(
                     self.settlement_run_id, duration_ms=self.settlement_permit_ms
                 )
-                _trace(
+                trace(
                     "settlement_permit_acquired",
                     permit_id=permit.permit_id,
                     generation=permit.generation,
@@ -165,139 +171,176 @@ class LoadPipeline:
                 for name in admission.missing_fields:
                     df = df.withColumn(name, F.lit(None).cast(head_fields[name].dataType))
 
-        # 3. contract
-        quarantined: DataFrame | None = None
-        cres: ContractResult | None = None
-        if self.contract:
-            cres = evaluate_contract(df, self.contract, as_of=as_of, observe=True)
-            df = cres.admitted
-            quarantined = cres.quarantined
-            _trace("contract_evaluated", contract_hash=self.contract.content_hash())
-
-        # 4. dedup under the declared order
-        if desc.dedup_keys:
-            order = [desc.cursor.field] if desc.cursor else desc.primary_key or desc.dedup_keys
-            df = dedup_keyed(df, desc.dedup_keys, order, keep=desc.dedup_keep)
-
-        # 5. late data — never silently dropped (late_data.py contract):
-        # quarantined late rows join the package's quarantine segment as
-        # evidence; recaptured rows persist to a carryover dir the next
-        # run re-reads (LateDataCarryoverRef parity with
-        # streaming/pipeline.py).
-        rows_late = 0
-        counts = []  # observed quarantine counts, read after the data write
-        if cres is not None:
-            counts.append(cres.observed_quarantine_count)
-        late_split = None
-        if self.watermark_column is not None and self.watermark_value is not None:
-            carry_root = Path(self.ledger.root) if self.ledger is not None else Path(self.package_root)
-            carryover_dir = carry_root / "carryover" / desc.resource_id
-            if self.late_action == "recapture" and carryover_dir.exists():
-                # materialize eagerly: the carryover dir is REPLACED
-                # below, so the plan must not lazily re-read it
-                carried = spark.read.parquet(str(carryover_dir)).localCheckpoint(eager=True)
-                df = df.unionByName(carried)
-
-            split = classify_late_data(df, self.watermark_column, self.watermark_value, self.late_action)
-            if self.late_action == "quarantine":
-                late = split.quarantine_evidence()
-                quarantined = (
-                    late
-                    if quarantined is None
-                    else quarantined.unionByName(late, allowMissingColumns=True)
-                )
-                late_split = split
-                counts.append(split.observed_late_count)
-                df = split.on_time
-            elif self.late_action == "recapture":
-                # persist for the NEXT run; replace the previous
-                # carryover set (those rows rejoined `df` above)
-                rows_late = split.persist_recaptured(carryover_dir)
-                df = split.on_time
-            else:
-                df = split.admitted_annotated
-            _trace("late_classified", action=self.late_action)
-
-        # 6. package (cursor frontier reuses the package's own stats
-        # pass instead of a separate max() job; the contract and late
-        # observations let the builder skip the quarantine job on clean
-        # batches)
-        builder = PackageBuilder(
-            self.package_root, desc.resource_id, compression=self.package_compression
+        carry_root = Path(self.ledger.root) if self.ledger is not None else Path(self.package_root)
+        package, rows_late, cres = build_package(
+            df, desc, self.package_root, trace=trace, contract=self.contract, as_of=as_of,
+            watermark_column=self.watermark_column, watermark_value=self.watermark_value,
+            late_action=self.late_action, carryover_dir=carry_root / "carryover" / desc.resource_id,
+            scan_plan=scan_plan, compression=self.package_compression,
         )
-        package = builder.build(
-            admitted=df,
-            quarantined=quarantined,
-            scan_plan=scan_plan,
-            contract=self.contract,
-            trace=trace,
-            quarantine_count_hint=lambda: sum(c() for c in counts),
+        if permit is not None and self.destination is not None:
+            # settlement boundary: re-read the authority (another writer
+            # may have published a promotion since admission) and
+            # re-assert the permit — a fenced run aborts HERE, before
+            # the destination mutates
+            SchemaAuthority(schemas, desc.resource_id).assert_permit(permit)
+            trace("settlement_permit_asserted", permit_id=permit.permit_id)
+        receipt, positions = deliver_package(
+            spark, package, self.destination, self.disposition, self.ledger,
+            cursor_field=desc.cursor.field if desc.cursor else None,
+            positions=self.extra_positions, trace=trace,
         )
-        if late_split is not None:
-            rows_late = late_split.observed_late_count()
-        _trace("package_built", package_id=package.package_id, rows=package.rows_admitted)
-        new_position = None
-        if desc.cursor:
-            import json as _json
-
-            stats = _json.loads(
-                (Path(package.path) / "stats" / "column_stats.json").read_text()
-            )
-            entry = stats.get(desc.cursor.field, {})
-            new_position = entry.get("max")
-            (Path(package.path) / "state").mkdir(exist_ok=True)
-            (Path(package.path) / "state" / "positions.json").write_text(
-                _json.dumps({desc.cursor.field: new_position}, default=str)
-            )
-
-        # 7. commit -> receipt -> verify -> checkpoint
-        receipt = None
-        if self.destination is not None:
-            if permit is not None:
-                # settlement boundary: re-read the authority (another
-                # writer may have published a promotion since
-                # admission) and re-assert the permit — a fenced run
-                # aborts HERE, before the destination mutates
-                from .types.authority import SchemaAuthority as _SA
-
-                _SA(
-                    Path(self.ledger.root) / "schemas", desc.resource_id
-                ).assert_permit(permit)
-                _trace("settlement_permit_asserted", permit_id=permit.permit_id)
-            receipt = self.destination.commit(spark, package, self.disposition)
-            receipt = self.destination.verify(spark, receipt, package)
-            _trace("committed", receipt_id=receipt.receipt_id, verified=receipt.verified)
-            if self.ledger:
-                self.ledger.record_receipt(receipt)
-                positions = {desc.cursor.field: new_position} if desc.cursor else {}
-                positions.update(self.extra_positions)
-                self.ledger.advance(desc.resource_id, receipt, positions)
-        if permit is not None and authority is not None:
-            from .types.authority import SchemaAuthority as _SA
-
-            _SA(Path(self.ledger.root) / "schemas", desc.resource_id).release_permit(
-                permit
-            )
+        if permit is not None:
+            SchemaAuthority(schemas, desc.resource_id).release_permit(permit)
 
         return RunResult(
-            package=package,
-            receipt=receipt,
-            rows_admitted=package.rows_admitted,
-            rows_quarantined=package.rows_quarantined,
-            rows_late=rows_late,
+            package, receipt, package.rows_admitted, package.rows_quarantined, rows_late,
             contract_result=cres,
-            resume_position=new_position,
+            resume_position=positions.get(desc.cursor.field) if desc.cursor else None,
         )
+
+
+class Trace:
+    """Timed step marks of one load, written to the package's
+    `trace.jsonl` once the receipt is known."""
+
+    def __init__(self):
+        self.t0 = time.perf_counter()
+        self.events: list[dict] = []
+
+    def __call__(self, step: str, **kv) -> None:
+        self.events.append({"step": step, "at_s": round(time.perf_counter() - self.t0, 3), **kv})
+
+    def write(self, package_path: str) -> None:
+        with open(Path(package_path) / "trace.jsonl", "w") as f:
+            for ev in self.events:
+                f.write(json.dumps(ev, default=str) + "\n")
+
+
+def build_package(
+    df: DataFrame,
+    desc: ResourceDescriptor,
+    package_root: str,
+    *,
+    trace: Trace,
+    contract: Contract | None,
+    watermark_column: str | None,
+    watermark_value: object,
+    late_action: str,
+    carryover_dir: Path,
+    as_of: datetime | None = None,
+    scan_plan: ScanPlan | None = None,
+    compression: str = "snappy",
+) -> tuple[PackageResult, int, ContractResult | None]:
+    """Steps 3-6 over `df`: contract -> dedup -> late split -> package.
+    A `watermark_value` of None means no late split. Returns the
+    package, its late-row count and the contract result."""
+    quarantined: DataFrame | None = None
+    cres: ContractResult | None = None
+    counts = []  # observed quarantine counts, read after the data write
+    if contract:
+        cres = evaluate_contract(df, contract, as_of=as_of, observe=True)
+        df, quarantined = cres.admitted, cres.quarantined
+        counts.append(cres.observed_quarantine_count)
+        trace("contract_evaluated", contract_hash=contract.content_hash())
+
+    if desc.dedup_keys:
+        order = [desc.cursor.field] if desc.cursor else desc.primary_key or desc.dedup_keys
+        df = dedup_keyed(df, desc.dedup_keys, order, keep=desc.dedup_keep)
+
+    # late data is never silently dropped (late_data.py contract):
+    # quarantined late rows join the package's quarantine segment as
+    # evidence; recaptured rows persist to the carryover dir and rejoin
+    # the next load, re-presented to the same contract/dedup path
+    # (LateDataCarryoverRef parity)
+    rows_late = 0
+    late_split = None
+    if watermark_column is not None and watermark_value is not None:
+        if late_action == "recapture" and carryover_dir.exists():
+            # materialize eagerly: the carryover dir is REPLACED below,
+            # so the plan must not lazily re-read it
+            carried = df.sparkSession.read.parquet(str(carryover_dir)).localCheckpoint(eager=True)
+            df = df.unionByName(carried)
+
+        split = classify_late_data(df, watermark_column, watermark_value, late_action)
+        if late_action == "quarantine":
+            late = split.quarantine_evidence()
+            quarantined = late if quarantined is None else quarantined.unionByName(
+                late, allowMissingColumns=True
+            )
+            late_split = split
+            counts.append(split.observed_late_count)
+            df = split.on_time
+        elif late_action == "recapture":
+            # persist for the NEXT load; replace the previous carryover
+            # set (those rows rejoined `df` above)
+            rows_late = split.persist_recaptured(carryover_dir)
+            df = split.on_time
+        else:
+            df = split.admitted_annotated
+        trace("late_classified", action=late_action)
+
+    # a clean batch (no contract rejections, no late rows) skips the
+    # quarantine job
+    package = PackageBuilder(package_root, desc.resource_id, compression=compression).build(
+        admitted=df, quarantined=quarantined, scan_plan=scan_plan, contract=contract,
+        quarantine_count_hint=lambda: sum(c() for c in counts),
+    )
+    if late_split is not None:
+        rows_late = late_split.observed_late_count()
+    trace("package_built", package_id=package.package_id, rows=package.rows_admitted)
+    return package, rows_late, cres
+
+
+def deliver_package(
+    spark: SparkSession,
+    package: PackageResult,
+    destination,
+    disposition: WriteDisposition,
+    ledger: CheckpointLedger | None,
+    *,
+    cursor_field: str | None = None,
+    positions: dict | None = None,
+    trace: Trace | None = None,
+) -> tuple[Receipt | None, dict]:
+    """Step 7: commit -> verify -> record_receipt -> checkpoint advance.
+
+    The positions (`positions` plus the max of `cursor_field` from the
+    package's column stats) go to the package's `state/positions.json`
+    and the checkpoint. An empty package is committed only under
+    REPLACE; otherwise nothing is committed and no position moves, so a
+    load that finds no new rows keeps its cursor. `advance` raises on an
+    unverified receipt: with a ledger, this returns only when the package
+    was delivered or there was nothing to deliver. Returns the receipt
+    (None when nothing was committed) and the positions."""
+    positions = dict(positions or {})
+    if cursor_field is not None:
+        stats = json.loads((Path(package.path) / "stats" / "column_stats.json").read_text())
+        positions = {cursor_field: stats.get(cursor_field, {}).get("max"), **positions}
+    if positions:
+        (Path(package.path) / "state" / "positions.json").write_text(json.dumps(positions, default=str))
+
+    receipt = None
+    if destination is not None and (package.rows_admitted or disposition == WriteDisposition.REPLACE):
+        receipt = destination.commit(spark, package, disposition)
+        receipt = destination.verify(spark, receipt, package)
+        if trace is not None:
+            trace("committed", receipt_id=receipt.receipt_id, verified=receipt.verified)
+    if trace is not None:
+        trace.write(package.path)
+    if receipt is not None and ledger is not None:
+        ledger.record_receipt(receipt)
+        ledger.advance(package.manifest["resource_id"], receipt, positions)
+    return receipt, positions
 
 
 def replay_package(spark: SparkSession, package_path: str, destination: ParquetDestination,
-                   disposition: WriteDisposition = WriteDisposition.APPEND) -> Receipt:
+                   disposition: WriteDisposition = WriteDisposition.APPEND) -> Receipt | None:
     """Rolling replay: re-drive a recorded package into a destination
     (`crates/cdf-runtime/src/rolling_replay.rs`). The package is the
-    source of truth; no upstream read happens."""
-    import json as _json
-
-    manifest = _json.loads((Path(package_path) / "manifest.json").read_text())
+    source of truth; no upstream read happens. Delivery follows
+    `deliver_package` with no ledger."""
+    manifest = json.loads((Path(package_path) / "manifest.json").read_text())
     pkg = PackageResult(
         package_id=manifest["package_id"],
         path=package_path,
@@ -307,5 +350,4 @@ def replay_package(spark: SparkSession, package_path: str, destination: ParquetD
         schema_fingerprint=manifest["schema_fingerprint"],
         manifest=manifest,
     )
-    receipt = destination.commit(spark, pkg, disposition)
-    return destination.verify(spark, receipt, pkg)
+    return deliver_package(spark, pkg, destination, disposition, None)[0]

@@ -1,23 +1,20 @@
 """Streaming load pipeline: Structured Streaming + the CDF commit path.
 
-The streaming analogue of :class:`cdf_spark.runtime.LoadPipeline`
-(§3.1 step 7 of SURVEY): `readStream` -> per-micro-batch (epoch)
-steps, all inside `foreachBatch`, so each epoch is one transactional
-unit with an auditable package:
+Each micro-batch (epoch) is one transactional unit with an auditable
+package, run inside `foreachBatch` through the same load chain as a
+bounded load (`runtime.build_package` and `runtime.deliver_package`).
+What this module adds around that chain:
 
-  1. observe max(watermark column) on the raw batch
-  2. contract evaluation (observes the quarantine count)
-  3. dedup within the epoch
-  4. late-data split against the watermark ledger (observes the late
-     count; recaptured rows are written to the carryover set)
-  5. package build: ONE data write computes steps 1-4 and every
-     observed scalar; the quarantine segment is written only when the
-     observed counts are non-zero
-  6. destination commit -> receipt verify -> checkpoint advance
-  7. watermark advance to the observed frontier, only after the
-     receipt verifies (or when there is nothing to commit)
-
-No step runs a Spark action just to read a count or a max.
+  replay guard  an epoch whose checkpoint already exists is skipped
+                (the restart after a crash between the sink commit and
+                Spark's offset commit)
+  frontier      max(watermark column) is observed on the raw batch and
+                rides the package's data write (no separate max() job);
+                the late split reads the watermark ledger's value
+  advance       the watermark moves to the observed frontier only after
+                delivery returns; an unverified receipt raises from the
+                checkpoint advance, the query fails and Spark does not
+                commit the offset, so the epoch is replayed
 
 Why engine-side watermarks instead of `withWatermark`: Spark's
 watermark silently DROPS late rows and only supports timestamps; the
@@ -46,13 +43,10 @@ from pathlib import Path
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..contracts.evaluator import evaluate_contract
 from ..contracts.policy import Contract
-from ..operators.dedup import dedup_keyed
-from ..operators.late_data import classify_late_data
-from ..package.builder import PackageBuilder
 from ..package.ledger import CheckpointLedger
 from ..plans.checkpoint import observed_get
+from ..runtime import Trace, build_package, deliver_package
 from ..sources.base import ResourceDescriptor, WriteDisposition
 from .epochs import DrainState, DrainTermination, EpochPolicy, StreamExtent
 from .watermark import (
@@ -136,94 +130,37 @@ class StreamingLoadPipeline:
 
         df = batch_df
         wm_obs = None
+        wm_value = None
         if self.watermark is not None:
+            wm_dtype = dict(batch_df.dtypes)[self.watermark.column]
             # the frontier this batch supports rides the package's data
             # write: a CollectMetrics node at the bottom of the plan sees
             # every batch row, so no separate max() job is run
             wm_obs = Observation(f"wm-frontier-{uuid.uuid4().hex[:8]}")
             df = df.observe(wm_obs, F.max(self.watermark.column).alias("max"))
-
-        quarantined = None
-        counts = []  # observed quarantine counts, read after the data write
-        if self.contract:
-            cres = evaluate_contract(df, self.contract, observe=True)
-            df, quarantined = cres.admitted, cres.quarantined
-            counts.append(cres.observed_quarantine_count)
-
-        if desc.dedup_keys:
-            order = [desc.cursor.field] if desc.cursor else desc.primary_key or desc.dedup_keys
-            df = dedup_keyed(df, desc.dedup_keys, order, keep=desc.dedup_keep)
-
-        rows_late = 0
-        late_split = None
-        if self.watermark is not None:
-            # recaptured rows from the previous epoch rejoin the batch
-            # (LateDataCarryoverRef parity): they are re-presented to
-            # the same contract/dedup path and re-classified.
-            carryover_dir = Path(self.ledger_root) / "carryover" / desc.resource_id
-            if self.late_action == "recapture" and carryover_dir.exists():
-                # materialize eagerly: the carryover dir is REPLACED later
-                # this epoch, so the plan must not lazily re-read it
-                carried = spark.read.parquet(str(carryover_dir)).localCheckpoint(eager=True)
-                df = df.unionByName(carried)
-
             current = wm_ledger.current(self.watermark.column)
             if current is not None:
-                dtype = dict(df.dtypes).get(self.watermark.column, "")
-                wm_value = parse_stored_watermark(current, dtype)
-                split = classify_late_data(df, self.watermark.column, wm_value, self.late_action)
-                if self.late_action == "quarantine":
-                    # evidence, not a drop: late rows join the package's
-                    # quarantine segment alongside contract rejections
-                    late = split.quarantine_evidence()
-                    quarantined = (
-                        late
-                        if quarantined is None
-                        else quarantined.unionByName(late, allowMissingColumns=True)
-                    )
-                    late_split = split
-                    counts.append(split.observed_late_count)
-                    df = split.on_time
-                elif self.late_action == "recapture":
-                    # persist for the NEXT epoch; replace the previous
-                    # carryover set (those rows are in `df` already)
-                    rows_late = split.persist_recaptured(carryover_dir)
-                    df = split.on_time
-                else:
-                    df = split.admitted_annotated
+                wm_value = parse_stored_watermark(current, wm_dtype)
 
-        builder = PackageBuilder(self.package_root, desc.resource_id)
-        package = builder.build(
-            admitted=df,
-            quarantined=quarantined,
-            contract=self.contract,
-            # a clean epoch (no contract rejections, no late rows) skips
-            # the quarantine job
-            quarantine_count_hint=lambda: sum(c() for c in counts),
+        trace = Trace()
+        package, rows_late, _ = build_package(
+            df, desc, self.package_root, trace=trace, contract=self.contract,
+            watermark_column=self.watermark.column if self.watermark else None,
+            watermark_value=wm_value, late_action=self.late_action,
+            carryover_dir=Path(self.ledger_root) / "carryover" / desc.resource_id,
         )
-        if late_split is not None:
-            rows_late = late_split.observed_late_count()
+        receipt, _ = deliver_package(
+            spark, package, self.destination, self.disposition, ck_ledger,
+            cursor_field=desc.cursor.field if desc.cursor else None,
+            positions={"epoch": epoch_id}, trace=trace,
+        )
+        receipt_verified = receipt is not None and receipt.verified
 
-        receipt_verified = False
-        commits = self.destination is not None and package.rows_admitted > 0
-        if commits:
-            receipt = self.destination.commit(spark, package, self.disposition)
-            receipt = self.destination.verify(spark, receipt, package)
-            receipt_verified = receipt.verified
-            ck_ledger.record_receipt(receipt)
-            if receipt.verified:
-                ck_ledger.advance(desc.resource_id, receipt, {"epoch": epoch_id})
-
-        # the watermark advances only once the epoch is delivered: an
-        # epoch whose receipt fails must not move it past rows that may
-        # be replayed
+        # reached only once the epoch is delivered (an unverified receipt
+        # raised above), so the watermark never passes replayable rows
         wm_after = None
-        if wm_obs is not None and (receipt_verified or not commits):
-            frontier = frontier_from_max(
-                observed_get(wm_obs)["max"],
-                dict(batch_df.dtypes)[self.watermark.column],
-                self.watermark,
-            )
+        if wm_obs is not None:
+            frontier = frontier_from_max(observed_get(wm_obs)["max"], wm_dtype, self.watermark)
             if frontier is not None:
                 wm_after = wm_ledger.advance(self.watermark.column, frontier)
 

@@ -109,9 +109,14 @@ def test_merge_disposition(spark, tmp_path):
     assert final == {(1, "old1"), (2, "new2"), (3, "new3")}
 
 
-def test_end_to_end_pipeline_with_incremental_resume(spark, tmp_path, sf_dir):
-    """Two runs: the second resumes from the checkpointed cursor and
-    loads zero new rows (idempotent incremental)."""
+@pytest.mark.parametrize("disposition", [WriteDisposition.APPEND, WriteDisposition.MERGE],
+                         ids=["append", "merge"])
+def test_end_to_end_pipeline_with_incremental_resume(spark, tmp_path, sf_dir, disposition):
+    """Three runs: the later two resume from the checkpointed cursor
+    and load zero new rows (idempotent incremental). A run with no new
+    rows commits nothing and keeps the cursor, so the third run does
+    not reload from scratch — under APPEND that would duplicate every
+    row, under MERGE it would re-admit them."""
     desc = ResourceDescriptor(
         resource_id="orders_inc",
         primary_key=["o_orderkey"],
@@ -126,16 +131,21 @@ def test_end_to_end_pipeline_with_incremental_resume(spark, tmp_path, sf_dir):
         package_root=str(tmp_path / "pkgs"),
         ledger=ledger,
         destination=ParquetDestination(tmp_path / "dest", merge_keys=["o_orderkey"]),
-        disposition=WriteDisposition.MERGE,
+        disposition=disposition,
     )
     r1 = pipe.run(spark)
     assert r1.receipt.verified and r1.rows_admitted > 0
     dest_rows = spark.read.parquet(str(tmp_path / "dest")).count()
     assert dest_rows == r1.rows_admitted
+    cursor = ledger.resume_position("orders_inc", "o_orderkey")
+    assert cursor is not None
 
-    r2 = pipe.run(spark)
-    assert r2.rows_admitted == 0  # cursor resumed: nothing new
-    assert spark.read.parquet(str(tmp_path / "dest")).count() == dest_rows
+    for _ in range(2):
+        r = pipe.run(spark)
+        assert r.rows_admitted == 0  # cursor resumed: nothing new
+        assert ledger.resume_position("orders_inc", "o_orderkey") == cursor
+        assert spark.read.parquet(str(tmp_path / "dest")).count() == dest_rows
+        assert r.receipt is None
 
 
 def test_replay_package(spark, tmp_path, orders):

@@ -1,6 +1,8 @@
 """Streaming: watermark ledger, partition combination, drain pipeline."""
 
 import datetime
+import json
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -715,12 +717,126 @@ def test_unverified_receipt_leaves_watermark_and_checkpoint_unchanged(spark, tmp
     assert checkpoint is not None and WatermarkLedger(tmp_path / "ledger", "ep").current("seq") == 180
 
     pipe.destination = _Unverified(tmp_path / "dest")
-    pipe._process_epoch(_batch(spark, [(3, 300, 1.0), (4, 400, 1.0)]), 1)
-    ep = pipe.epochs[1]
-    assert not ep.receipt_verified and ep.watermark_after is None
+    # the checkpoint advance refuses the receipt and the epoch fails, so
+    # Spark would not commit its offset and the epoch would be replayed
+    with pytest.raises(ValueError, match="not verified"):
+        pipe._process_epoch(_batch(spark, [(3, 300, 1.0), (4, 400, 1.0)]), 1)
+    assert len(pipe.epochs) == 1
     assert WatermarkLedger(tmp_path / "ledger", "ep").current("seq") == 180
     assert CheckpointLedger(tmp_path / "ledger").latest("ep") == checkpoint
     assert not CheckpointLedger(tmp_path / "ledger").epoch_committed("ep", 1)
+
+
+def _land_files(spark, tmp_path, batches):
+    """Each batch as one flat parquet file in `tmp_path / "in"`, in order."""
+    import os
+    import shutil
+
+    src = tmp_path / "in"
+    src.mkdir()
+    for k, rows in enumerate(batches):
+        stage = tmp_path / f"stage{k}"
+        _batch(spark, rows).coalesce(1).write.parquet(str(stage))
+        (part,) = stage.glob("*.parquet")
+        shutil.move(str(part), str(src / f"b{k}.parquet"))
+        os.utime(src / f"b{k}.parquet", (1_000 + k, 1_000 + k))
+    return src
+
+
+def test_unverified_drain_epoch_is_replayed_after_restart(spark, tmp_path):
+    """A DRAIN whose first receipt fails to verify stops with an error
+    instead of letting Spark commit the offset; the restart (same Spark
+    checkpoint, a good destination) delivers both epochs."""
+    from pyspark.errors import StreamingQueryException
+
+    class _Unverified(ParquetDestination):
+        def verify(self, spark, receipt, package):
+            receipt.verified = False
+            return receipt
+
+    src = _land_files(spark, tmp_path, [[(1, 100, 1.0), (2, 200, 1.0)], [(3, 300, 1.0)]])
+    pipe = _epoch_pipe(
+        tmp_path,
+        destination=_Unverified(tmp_path / "lost"),
+        source_path=str(src),
+        reader_options={"maxFilesPerTrigger": 1},
+    )
+    with pytest.raises(StreamingQueryException, match="not verified"):
+        pipe.run(spark)
+    assert pipe.epochs == [] and WatermarkLedger(tmp_path / "ledger", "ep").current("seq") is None
+
+    pipe.destination = ParquetDestination(tmp_path / "dest")
+    epochs = pipe.run(spark)
+    assert [e.epoch_id for e in epochs] == [0, 1]
+    assert all(e.receipt_verified and e.package_id for e in epochs)
+    rows = sorted(r.event_id for r in spark.read.parquet(str(tmp_path / "dest")).collect())
+    assert rows == [1, 2, 3]
+
+
+def test_bounded_load_and_drain_epoch_build_the_same_package(spark, tmp_path):
+    """The same two files through one bounded `LoadPipeline` run and
+    one DRAIN epoch, with the same contract, dedup keys and watermark
+    value, give the same package values, counts and destination rows.
+    (`package_id` differs: only the bounded load hashes a scan plan.)"""
+    from cdf_spark.package.ledger import CheckpointLedger
+    from cdf_spark.runtime import LoadPipeline
+    from cdf_spark.sources import FileResource
+    from cdf_spark.sources.base import CursorSpec
+
+    src = _land_files(spark, tmp_path, [
+        # 2 contract rejections (one with a late seq: the contract
+        # claims it first) and a late row (seq <= 150)
+        [(1, 100, 1.0), (2, 140, -1.0), (3, 200, 2.0), (4, 210, -3.0), (5, 220, 5.0)],
+        # a duplicate key (event_id 5, the later seq wins) and a late row
+        [(5, 260, 6.0), (6, 150, 1.0), (7, 300, 7.0)],
+    ])
+    desc = ResourceDescriptor("eq", primary_key=["event_id"], dedup_keys=["event_id"],
+                              cursor=CursorSpec("seq"))
+    contract = Contract(rules=[RangeRule("value", min=0.0, max=1e9)])
+
+    bounded = LoadPipeline(
+        resource=FileResource(desc, str(src)),
+        contract=contract,
+        package_root=str(tmp_path / "b_pkgs"),
+        ledger=CheckpointLedger(tmp_path / "b_ledger"),
+        destination=ParquetDestination(tmp_path / "b_dest"),
+        watermark_column="seq",
+        watermark_value=150,
+        late_action="quarantine",
+    ).run(spark)
+
+    WatermarkLedger(tmp_path / "s_ledger", "eq").advance("seq", 150)
+    stream = StreamingLoadPipeline(
+        descriptor=desc,
+        source_path=str(src),
+        schema=EVENT_SCHEMA,
+        contract=contract,
+        watermark=WatermarkPolicy("seq", delay=20),
+        late_action="quarantine",
+        package_root=str(tmp_path / "s_pkgs"),
+        ledger_root=str(tmp_path / "s_ledger"),
+        destination=ParquetDestination(tmp_path / "s_dest"),
+    )
+    (epoch,) = stream.run(spark)
+
+    assert (bounded.rows_admitted, bounded.rows_quarantined, bounded.rows_late) == (3, 4, 2)
+    assert (epoch.rows_admitted, epoch.rows_quarantined, epoch.rows_late) == (3, 4, 2)
+    s_pkg = tmp_path / "s_pkgs" / epoch.package_id
+    s_manifest = json.loads((s_pkg / "manifest.json").read_text())
+    assert s_manifest["value_hash"] == bounded.package.value_hash
+    assert bounded.receipt.verified and epoch.receipt_verified
+
+    def dest_rows(name):
+        return sorted(tuple(r) for r in spark.read.parquet(str(tmp_path / name)).collect())
+
+    assert dest_rows("b_dest") == dest_rows("s_dest") == [(3, 200, 2.0), (5, 260, 6.0), (7, 300, 7.0)]
+
+    # both packages carry the whole trace, written after verify, and
+    # their checkpoint positions
+    for pkg, extra in ((Path(bounded.package.path), {}), (s_pkg, {"epoch": 0})):
+        steps = [json.loads(line)["step"] for line in (pkg / "trace.jsonl").read_text().splitlines()]
+        assert steps[-3:] == ["late_classified", "package_built", "committed"]
+        assert json.loads((pkg / "state" / "positions.json").read_text()) == {"seq": 300, **extra}
 
 
 @pytest.mark.parametrize("disposition", ["append", "replace", "merge"])
@@ -750,8 +866,6 @@ def test_epoch_job_count_guard(spark, tmp_path, monkeypatch):
     quarantine write. The late count, the frontier and the keyless
     APPEND verify ride those writes. Jobs are counted by a per-epoch
     job tag through the status tracker."""
-    import os
-    import shutil
     import uuid
 
     sc = spark.sparkContext
@@ -767,20 +881,12 @@ def test_epoch_job_count_guard(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(StreamingLoadPipeline, "_process_epoch", tagged)
 
-    src = tmp_path / "in"
-    src.mkdir()
-    batches = [
+    src = _land_files(spark, tmp_path, [
         # epoch 0: one contract rejection, no watermark yet
         [(i, i * 10, float(i)) for i in range(1, 41)] + [(41, 410, -1.0)],
         # epoch 1: two late rows (seq <= 390), one duplicate key
         [(i, i * 10, float(i)) for i in range(50, 90)] + [(90, 100, 1.0), (91, 200, 1.0), (50, 505, 2.0)],
-    ]
-    for k, rows in enumerate(batches):
-        stage = tmp_path / f"stage{k}"
-        _batch(spark, rows).coalesce(1).write.parquet(str(stage))
-        (part,) = stage.glob("*.parquet")
-        shutil.move(str(part), str(src / f"b{k}.parquet"))
-        os.utime(src / f"b{k}.parquet", (1_000 + k, 1_000 + k))
+    ])
 
     pipe = _epoch_pipe(
         tmp_path,
