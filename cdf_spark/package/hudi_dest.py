@@ -29,6 +29,7 @@ from pathlib import Path
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.layout import file_key, scan_file_key
 from ..sources.base import WriteDisposition
 from ..sources.hudi import HudiFixtureWriter, HudiTable
 from .builder import PackageResult
@@ -193,9 +194,9 @@ class HudiDestination:
         per = (
             spark.read.parquet(*[str(p) for p in files])
             .select(
-                F.regexp_extract(
-                    F.col("_metadata.file_path"), r"([^/]+)_0-0-0_\d+\.parquet$", 1
-                ).alias("_fid"),
+                F.regexp_extract(scan_file_key(), r"([^/]+)_0-0-0_\d+\.parquet$", 1).alias(
+                    "_fid"
+                ),
                 F.explode(
                     bloom_positions(
                         _bloom_key_expr(self.merge_keys), _BLOOM_M, _BLOOM_K
@@ -338,14 +339,13 @@ class HudiDestination:
         if not live:
             w.commit(batch)  # no group can hold any batch key: all inserts
             return
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
         fid_map = spark.createDataFrame(
-            [(p, fid) for fid, _part, p in live], "_path string, _fid string"
+            [(file_key(p), fid) for fid, _part, p in live], "_path string, _fid string"
         )
         cur = (
             spark.read.option("mergeSchema", "true")
             .parquet(*[p for _, _, p in live])
-            .withColumn("_path", norm(F.col("_metadata.file_path")))
+            .withColumn("_path", scan_file_key())
             .join(F.broadcast(fid_map), on="_path")
             .drop("_path")
         )

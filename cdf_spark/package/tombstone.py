@@ -42,6 +42,7 @@ import shutil
 import uuid
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,6 +51,7 @@ from .builder import PackageResult
 from .ledger import Receipt, verify_frame
 
 VERSION_COL = "_cdf_version"
+_RESERVED = {"v", VERSION_COL}
 
 
 class TombstoneParquetDestination:
@@ -78,14 +80,25 @@ class TombstoneParquetDestination:
         package: PackageResult,
         disposition: WriteDisposition = WriteDisposition.APPEND,
     ) -> Receipt:
+        src = Path(package.data_path())
+        segs = sorted(src.glob("*.parquet"))
+        # `data/v=N/` makes `v` a hive partition column, and reads
+        # rename it to VERSION_COL: a user column of either name would
+        # be overwritten by the version number
+        names = pq.read_schema(segs[0]).names if segs else []
+        clash = [c for c in names if c.lower() in _RESERVED]
+        if clash:
+            raise ValueError(
+                f"TombstoneParquetDestination: column(s) {clash} collide with the "
+                f"version partition ({sorted(_RESERVED)} are reserved)"
+            )
         state = self._state()
         v = state["current"] + 1
         vdir = self.table_path / "data" / f"v={v}"
         if vdir.exists():  # orphan from a crashed attempt: never referenced
             shutil.rmtree(vdir)
         vdir.mkdir(parents=True)
-        src = Path(package.data_path())
-        for seg in sorted(src.glob("*.parquet")):
+        for seg in segs:
             shutil.copy2(seg, vdir / f"{package.package_id}-{seg.name}")
         # carry the package's zone maps: version-level min/max lets
         # read() prune whole version dirs before Spark ever lists them

@@ -40,17 +40,19 @@ def pin_worthwhile(source: DataFrame) -> bool:
     one synchronous eager-checkpoint job (guide §5 "caching").
 
     Unknown statistics (Long.MaxValue sentinel) return False — the
-    conservative lazy shape."""
+    conservative lazy shape. A gate that is not an integer raises."""
+    raw = source.sparkSession.conf.get(PIN_GATE_CONF, str(PIN_GATE_DEFAULT))
     try:
-        gate = int(
-            source.sparkSession.conf.get(PIN_GATE_CONF, str(PIN_GATE_DEFAULT))
-        )
-        if gate <= 0:
-            return True
+        gate = int(raw)
+    except ValueError:
+        raise ValueError(f"{PIN_GATE_CONF}={raw!r} is not an integer byte count") from None
+    if gate <= 0:
+        return True
+    try:
         est = int(str(source._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-        return gate <= est < (1 << 62)
     except Exception:  # noqa: BLE001 — stats access is best-effort
         return False
+    return gate <= est < (1 << 62)
 
 
 def pin_if_expensive(df: DataFrame, source: DataFrame) -> DataFrame:

@@ -11,14 +11,141 @@ SCALE.md's deployment levers made concrete:
 - **Salting**: a hot key overwhelms one reducer in a groupBy. AQE
   splits skewed JOIN partitions but not aggregations; two-phase
   salted aggregation bounds any reducer at 1/salt of the hot key.
+- **Scan-file identity**: which file a scan row came from, and the
+  per-file values (partition columns of linked files) attached to it.
+  Every reader that joins scan rows to manifest, log or delete-file
+  paths keys both sides with `scan_file_key` / `file_key`.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import re
+from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+_SCHEME = r"^file:/+"
+
+
+def scan_file_key() -> Column:
+    """The file a scan row came from, as the raw filesystem path.
+
+    This is the one file-key rule. Spark reports
+    `_metadata.file_path` as a percent-encoded URI
+    (`file:/data/a%20b+c%25d/x.parquet`), while manifests, logs and
+    delete files name the raw path (`/data/a b+c%d/x.parquet`). The key
+    percent-decodes the URI and collapses the local scheme. `url_decode`
+    is form decoding (`+` is a space), so a literal `+` is escaped
+    first. `file_key` applies the same scheme collapse to paths that
+    are already raw, so both sides of every (file, ...) join agree for
+    any file name."""
+    uri = F.regexp_replace(F.col("_metadata.file_path"), r"\+", "%2B")
+    return file_key(F.url_decode(uri))
+
+
+def file_key(path):
+    """Driver-side twin of `scan_file_key` for a raw path (a manifest,
+    log or delete-file entry): a `str` gives a `str`, a Column (a
+    delete file's `file_path` column) gives a Column."""
+    if isinstance(path, Column):
+        return F.regexp_replace(path, _SCHEME, "/")
+    return re.sub(_SCHEME, "/", path)
+
+
+# Python class -> Spark type of its mapping column. bool comes before
+# int: True is an int to Python, and must not read as epoch day 1.
+_VALUE_CLASSES = {
+    "boolean": ((bool,), T.BooleanType()),
+    "bigint": ((int,), T.LongType()),
+    "double": ((float,), T.DoubleType()),
+    "string": ((str,), T.StringType()),
+    "binary": ((bytes, bytearray), T.BinaryType()),
+}
+
+
+def _value_class(v) -> str:
+    for name, (classes, _t) in _VALUE_CLASSES.items():
+        if isinstance(v, classes):
+            return name
+    raise TypeError(f"file value {v!r} ({type(v).__name__}) has no in-plan conversion")
+
+
+def _convert(col: Column, cls: str, dtype: T.DataType, name: str) -> Column:
+    """Raw value -> `dtype`, the conversion the old per-file literal
+    applied. Integers on date/timestamp columns are Iceberg's epoch-day
+    and epoch-microsecond encodings (Spark's int->date cast is invalid
+    and long->timestamp means seconds); everything else casts, so
+    Delta's partitionValues strings parse as Spark parses them."""
+    is_ts = isinstance(dtype, (T.TimestampType, T.TimestampNTZType))
+    if cls == "boolean" and (is_ts or isinstance(dtype, T.DateType)):
+        raise ValueError(f"file value for {name!r}: a boolean is not a {dtype.simpleString()}")
+    if cls == "bigint" and isinstance(dtype, T.DateType):
+        return F.date_add(F.lit("1970-01-01").cast("date"), col.cast("int"))
+    if cls == "bigint" and is_ts:
+        return F.timestamp_micros(col).cast(dtype)
+    return col.cast(dtype)
+
+
+def attach_file_values(
+    df: DataFrame,
+    values_by_file: Mapping[str, Mapping[str, object]],
+    fields: list[tuple[str, T.DataType]],
+) -> DataFrame:
+    """Attach per-file values to a scan as typed columns.
+
+    `df` must still resolve `_metadata` (a scan, or projections over
+    one). `values_by_file` maps a raw file path to {column: raw value};
+    `fields` names the (column, type) pairs to reconstitute. One
+    broadcast (file key -> raw values) mapping joins the scan, so a
+    read stays one file scan however many partitions it spans, and
+    the raw values are converted in-plan (`_convert`). Per column, a
+    file whose values omit the column keeps the scan's own column
+    (null when the scan has none). A scan file missing from the
+    mapping raises on every attached column: Catalyst prunes unread
+    columns, so a guard on one column alone would not survive a query
+    that reads another."""
+    if not fields:
+        return df
+    classes = [
+        sorted({_value_class(vals[c]) for vals in values_by_file.values() if vals.get(c) is not None})
+        for c, _t in fields
+    ]
+    schema = [T.StructField("__cdf_file", T.StringType())]
+    for i, cls in enumerate(classes):
+        schema.append(T.StructField(f"__cdf_has{i}", T.BooleanType()))
+        schema += [T.StructField(f"__cdf_v{i}_{k}", _VALUE_CLASSES[k][1]) for k in cls]
+    rows = []
+    for path, vals in values_by_file.items():
+        row = [file_key(path)]
+        for (c, _t), cls in zip(fields, classes):
+            v = vals.get(c)
+            row.append(c in vals)
+            row += [v if v is not None and _value_class(v) == k else None for k in cls]
+        rows.append(tuple(row))
+    mapping = df.sparkSession.createDataFrame(rows, T.StructType(schema))
+    out = df.withColumn("__cdf_file", scan_file_key()).join(
+        F.broadcast(mapping), on="__cdf_file", how="left"
+    )
+    for i, ((c, dtype), cls) in enumerate(zip(fields, classes)):
+        has = F.col(f"__cdf_has{i}")
+        value = F.coalesce(
+            *[_convert(F.col(f"__cdf_v{i}_{k}"), k, dtype, c) for k in cls],
+            F.lit(None).cast(dtype),
+        )
+        miss = F.raise_error(
+            F.concat(
+                F.lit(f"file values for {c!r}: scan file "),
+                F.col("__cdf_file"),
+                F.lit(" is not in the mapping"),
+            )
+        )
+        own = F.col(c) if c in df.columns else F.lit(None)
+        out = out.withColumn(
+            c, F.when(has.isNull(), miss).when(has, value).otherwise(own).cast(dtype)
+        )
+    return out.drop(*[f.name for f in schema])
 
 
 def write_bucketed(

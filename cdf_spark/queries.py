@@ -55,6 +55,7 @@ from .operators.similarity import (
     semantic_dedup,
 )
 from .operators.text import analyze_documents, hash64
+from .plans.layout import scan_file_key
 from .plans.scan import ScanRequest
 from .sources.base import ResourceDescriptor
 from .sources.files import FileResource
@@ -1879,7 +1880,7 @@ def iceberg_row_deletes(spark: SparkSession, sf: str) -> DataFrame:
         t = IcebergTable(f"{tmp}/t")
         located = (
             t.read(spark, snapshot_id=s1)
-            .withColumn("_f", F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/"))
+            .withColumn("_f", scan_file_key())
             .withColumn("_p", F.col("_metadata.row_index"))
             .filter(F.col("o_orderkey") <= 100)
             .select("_f", "_p")
@@ -4157,10 +4158,7 @@ def iceberg_changelog_pos_deletes(spark: SparkSession, sf: str) -> DataFrame:
         t = IcebergTable(f"{tmp}/t")
         located = (
             t.read(spark, snapshot_id=s1)
-            .withColumn(
-                "_f",
-                F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/"),
-            )
+            .withColumn("_f", scan_file_key())
             .withColumn("_p", F.col("_metadata.row_index"))
             .filter((F.col("o_orderkey") > 50) & (F.col("o_orderkey") <= 100))
             .select("_f", "_p")

@@ -54,6 +54,8 @@ from pathlib import Path
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.layout import scan_file_key
+
 BLOOM_DIR = "_bloom_index"
 BLOOM_M = 1 << 16  # 65536 bits = 8 KiB per (file, column)
 BLOOM_K = 4
@@ -116,10 +118,9 @@ def build_bloom_index(
             "probe encoding (CAST AS STRING does not round-trip Python "
             "str()); only integer-family and string columns are indexable"
         )
-    norm = F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
     positions = (
         df.select(
-            norm.alias("_path"),
+            scan_file_key().alias("_path"),
             F.explode(
                 bloom_positions(F.col(col).cast("string"), m, k_hashes)
             ).alias("p"),
@@ -144,15 +145,12 @@ def build_bloom_index(
         try:
             rel = str(_P(abspath).resolve().relative_to(_P(root_s).resolve()))
         except ValueError:
-            # _metadata path outside the root (URI quirks, symlinks);
-            # report it so the driver counts it unmatched
+            # scanned path outside the root (symlinks); report it so
+            # the driver counts it unmatched
             return pd.DataFrame({"path": [abspath], "built": [False]})
         if not (_P(root_s) / rel).exists():
-            # _metadata.file_path can be URI-ENCODED (e.g. %20 for a
-            # space) — relative_to succeeds on the encoded string but
-            # the derived rel names no real file; writing a sidecar
-            # under it would orphan it where no probe ever looks.
-            # Refuse; the driver's footer check counts it unmatched.
+            # a key that names no real file would orphan its sidecar
+            # where no probe looks; the driver counts it unmatched
             return pd.DataFrame({"path": [abspath], "built": [False]})
         bits = bytearray(m // 8)
         for p in pdf["p"]:
@@ -191,8 +189,8 @@ def build_bloom_index(
             continue
         # no positions came back under this file's path. Either the
         # file is genuinely empty (an all-zero sidecar is correct) or
-        # _metadata.file_path didn't string-match the resolved path
-        # (URI-encoding, symlinks). Writing an all-zero bloom for a
+        # its scan key didn't string-match the resolved path
+        # (symlinks). Writing an all-zero bloom for a
         # NON-empty file would manufacture false negatives — the one
         # failure mode a bloom must never have — so verify emptiness
         # from the footer and otherwise write NOTHING (a missing

@@ -50,6 +50,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from ..expressions.lowering import lower
+from ..plans.layout import attach_file_values, scan_file_key
 from ..plans.scan import Capability, ScanPlan, ScanRequest, negotiate
 from ..positions import TableSnapshotPosition
 
@@ -558,112 +559,23 @@ class DeltaTable:
         """Partitioned table whose live files are LINKED by absolute
         path (the XTable / shallow-clone shape): the files live in the
         SOURCE table's layout, so Spark's hive-directory inference
-        cannot reconstitute the partition columns. Reconstitute from
-        the log's add.partitionValues instead — the protocol's
-        authoritative record.
-
-        r15 (guide §6/§7.3): the former shape built one scan per live
-        partition TUPLE and unioned them — O(live partitions) plan
-        branches whose analysis and per-task plan deserialization
-        dominated the read (a 147-day fixture took ~66 s for 295 tiny
-        files). Now ONE multi-file scan joins a BROADCAST
-        (file -> typed partition values) mapping on the scan's
-        `_metadata.file_path` (the DV path's proven normalization);
-        the typed conversion is the same `_typed_partition_value`,
-        run once per file on the driver. A path that misses the
-        mapping raises loudly instead of silently nulling; a
-        partition value the declared type cannot parse falls back to
-        the per-group union shape (the old exactness behavior for
-        that defensive corner)."""
-        from collections import defaultdict
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
+        cannot reconstitute the partition columns. Reconstitute them
+        from the log's add.partitionValues instead — the protocol's
+        authoritative record — attached per file to one multi-file
+        scan (`plans.layout.attach_file_values`)."""
         schema = self._logical_schema(version)
         if schema is None:
             raise DeltaError("linked partitioned read requires a declared schema")
         pv_of = {p: pv for p, _dv, pv in self.live_adds(version)}
         by_name = {f.name: f for f in schema.fields}
-        part_names = sorted(
-            {c for f in files for c in (pv_of.get(f) or {}) if c in by_name}
+        values = {f: pv_of.get(f) or {} for f in files}
+        part_names = sorted({c for pv in values.values() for c in pv if c in by_name})
+        df = attach_file_values(
+            spark.read.schema(schema).parquet(*files),
+            values,
+            [(c, by_name[c].dataType) for c in part_names],
         )
-        typed_rows, clean = [], True
-        for f in files:
-            pv = pv_of.get(f) or {}
-            vals: list = [f, True]
-            for c in part_names:
-                raw = pv.get(c)
-                has = c in pv
-                v = None if raw is None else _typed_partition_value(raw, by_name[c].dataType)
-                if (
-                    v is not None
-                    and isinstance(v, str)
-                    and not isinstance(by_name[c].dataType, T.StringType)
-                ):
-                    clean = False  # unparseable value: keep the old exact shape
-                vals.extend([has, v])
-            typed_rows.append(tuple(vals))
-        if clean and part_names:
-            mschema = T.StructType(
-                [
-                    T.StructField("__cdf_link_path", T.StringType()),
-                    T.StructField("__cdf_link_ok", T.BooleanType()),
-                ]
-                + [
-                    fld
-                    for c in part_names
-                    for fld in (
-                        T.StructField(f"__cdf_has_{c}", T.BooleanType()),
-                        T.StructField(f"__cdf_pv_{c}", by_name[c].dataType),
-                    )
-                ]
-            )
-            mdf = spark.createDataFrame(typed_rows, mschema)
-            # same URI normalization the DV anti-join keys on
-            uri = F.regexp_replace(F.col("_metadata.file_path"), r"\+", "%2B")
-            norm = F.regexp_replace(F.url_decode(uri), "^file:/+", "/")
-            df = (
-                spark.read.schema(schema)
-                .parquet(*files)
-                .withColumn("__cdf_link_path", norm)
-                .join(F.broadcast(mdf), on="__cdf_link_path", how="left")
-            )
-            for i, c in enumerate(part_names):
-                fld = by_name[c]
-                expr = F.when(F.col(f"__cdf_has_{c}"), F.col(f"__cdf_pv_{c}")).otherwise(
-                    F.col(c)
-                )
-                if i == 0:
-                    # loud guard: a scan path the mapping does not know
-                    # means the normalization diverged — corrupting the
-                    # partition column silently is never acceptable
-                    expr = F.when(
-                        F.col("__cdf_link_ok").isNull(),
-                        F.raise_error(
-                            F.lit(
-                                "linked partitioned read: scan file path not in "
-                                "the live-add mapping (path normalization mismatch)"
-                            )
-                        ).cast(fld.dataType),
-                    ).otherwise(expr)
-                df = df.withColumn(c, expr.cast(fld.dataType))
-            return df.select(*[f.name for f in schema.fields])
-        groups: dict[tuple, list[str]] = defaultdict(list)
-        for f in files:
-            groups[tuple(sorted((pv_of.get(f) or {}).items()))].append(f)
-        dfs = []
-        for key, paths in sorted(groups.items()):
-            g = spark.read.schema(schema).parquet(*paths)
-            for c, raw in key:
-                fld = by_name.get(c)
-                if fld is None:
-                    continue
-                v = None if raw is None else _typed_partition_value(raw, fld.dataType)
-                g = g.withColumn(c, F.lit(v).cast(fld.dataType))
-            dfs.append(g.select(*[f.name for f in schema.fields]))
-        return reduce(DataFrame.unionByName, dfs)
+        return df.select(*[f.name for f in schema.fields])
 
     def files_for_version(self, version: int) -> list[str]:
         return [p for p, _dv in self.live_files_with_dvs(version)]
@@ -1117,14 +1029,10 @@ class DeltaTable:
             [(p, _json.dumps(d)) for p, d in dvs], "path string, desc string"
         ).repartition(len(dvs))
         pos_df = desc_df.mapInPandas(decode, schema="_dv_file string, _dv_pos long")
-        # `_metadata.file_path` is a URI (percent-encoded for spaces /
-        # special chars) while DV descriptors key on raw resolved paths
-        # — decode before comparing, or DV'd files with such names miss
-        # the anti-join and deleted rows silently reappear
-        # url_decode is form-decoding (`+` -> space); re-escape literal
-        # `+` first so this is pure percent-decoding of the URI
-        uri = F.regexp_replace(F.col("_metadata.file_path"), r"\+", "%2B")
-        norm = F.regexp_replace(F.url_decode(uri), "^file:/+", "/")
+        # DV descriptors key on raw resolved paths: the scan side must
+        # use the same file key, or DV'd files whose names need URI
+        # escaping miss the anti-join and deleted rows reappear
+        norm = scan_file_key()
         # collision-proof internal key names: withColumn("_file") would
         # silently overwrite (then drop) user columns of that name
         fkey, pkey = "__cdf_dv_file", "__cdf_dv_pos"
@@ -2078,12 +1986,10 @@ class DeltaFixtureWriter:
         adds = t.live_adds(self._version)
         pairs = [(p, dv) for p, dv, _pv in adds]
         pv_of = {p: pv for p, _dv, pv in adds}
-        # percent-decode the file_path URI (protecting literal `+`) so
         # victim keys line up with the raw resolved paths DV
         # descriptors use; internal names are collision-proof against
         # user columns (filter(condition) still sees every user column)
-        uri = F.regexp_replace(F.col("_metadata.file_path"), r"\+", "%2B")
-        norm = F.regexp_replace(F.url_decode(uri), "^file:/+", "/")
+        norm = scan_file_key()
         fkey, pkey = "__cdf_dv_file", "__cdf_dv_pos"
         reader = spark.read
         if self.partition_by:
@@ -2251,8 +2157,7 @@ class DeltaFixtureWriter:
         pairs = [(p, dv) for p, dv, _pv in adds3]
         pv_of = {p: pv for p, _dv, pv in adds3}
         keys = spark.read.parquet(*paths).select(*merge_keys).dropDuplicates()
-        uri = F.regexp_replace(F.col("_metadata.file_path"), r"\+", "%2B")
-        norm = F.regexp_replace(F.url_decode(uri), "^file:/+", "/")
+        norm = scan_file_key()
         fkey, pkey = "__cdf_dv_file", "__cdf_dv_pos"
         # partitioned layouts read with basePath so hive partition
         # columns reconstitute — merge keys MAY include them, and the

@@ -42,8 +42,10 @@ import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from ..expressions.lowering import lower
+from ..plans.layout import attach_file_values, file_key, scan_file_key
 from ..plans.scan import Capability, ScanPlan, ScanRequest, negotiate
 from ..positions import TableSnapshotPosition
 from .avro_format import decode_container, write_container
@@ -386,21 +388,11 @@ def _file_can_match(expr, bounds: dict[str, tuple]) -> bool | None:
     return None
 
 
-def _norm_local(p: str) -> str:
-    """Normalize a local path/URI for identity comparison (the same
-    `^file:/+` collapse the positional-delete reader applies)."""
-    return re.sub(r"^file:/+", "/", p)
-
-
-def _strip_uri(p: str) -> str:
-    return p[7:] if p.startswith("file://") else p
-
-
 def is_iceberg_layout(root: str | Path) -> bool:
     """True when the directory carries real Iceberg table metadata
     (`metadata/*.metadata.json`) as opposed to the home-grown
     SnapshotTable layout (`metadata/v<N>.json` + `current`)."""
-    meta = Path(_strip_uri(str(root))) / "metadata"
+    meta = Path(file_key(str(root))) / "metadata"
     return meta.is_dir() and any(meta.glob("*.metadata.json"))
 
 
@@ -488,7 +480,7 @@ class IcebergTable:
 
     # -- manifest walking --------------------------------------------------
     def _resolve(self, path: str) -> Path:
-        p = Path(_strip_uri(path))
+        p = Path(file_key(path))
         if p.is_absolute():
             return p
         return self.root / p
@@ -601,14 +593,14 @@ class IcebergTable:
         return [p for p, _ in self._live_entries(snapshot_id, content=1)]
 
     _ICE_TO_SPARK = {
-        "int": "int",
-        "long": "bigint",
-        "float": "float",
-        "double": "double",
-        "string": "string",
-        "date": "date",
-        "timestamp": "timestamp",
-        "timestamptz": "timestamp",
+        "int": T.IntegerType(),
+        "long": T.LongType(),
+        "float": T.FloatType(),
+        "double": T.DoubleType(),
+        "string": T.StringType(),
+        "date": T.DateType(),
+        "timestamp": T.TimestampType(),
+        "timestamptz": T.TimestampType(),
     }
 
     def _schema_by_id(self, schema_id: int) -> dict:
@@ -902,226 +894,67 @@ class IcebergTable:
                 )
         return sorted(out, key=lambda d: d["path"])
 
-    def _assemble_mapped(
-        self,
-        spark: SparkSession,
-        entries: list[dict],
-        with_meta: bool,
-        cur_fields: list[dict],
-        spec_to_cur: dict,
-        cur_to_ice_t: dict,
-    ):
-        """One multi-file scan per WRITTEN SCHEMA, with identity-
-        partition fields reconstituted from a broadcast
-        (file -> typed value) mapping instead of per-partition-tuple
-        literal branches (r15). Returns None when a partition value
-        cannot be converted with exact fidelity driver-side — the
-        caller then keeps the per-tuple union shape."""
-        import datetime as _dt
-        from collections import defaultdict
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
-        if not cur_fields:
-            return None  # metadata-without-schemas passthrough: old shape
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
-        _EPOCH_D = _dt.date(1970, 1, 1)
-        _EPOCH_TS = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
-
-        def typed(v, ice_t, spark_t):
-            """(ok, value): the python value whose lit().cast(spark_t)
-            the old per-group literal produced — exact or refuse."""
-            if v is None:
-                return True, None
-            if ice_t == "date" and isinstance(v, int):
-                return True, _EPOCH_D + _dt.timedelta(days=v)
-            if ice_t in ("timestamp", "timestamptz") and isinstance(v, int):
-                return True, _EPOCH_TS + _dt.timedelta(microseconds=v)
-            if isinstance(v, bool):
-                return spark_t == "boolean", v
-            if spark_t in ("int", "bigint") and isinstance(v, int):
-                return True, v
-            if spark_t in ("float", "double") and isinstance(v, (int, float)):
-                return True, float(v)
-            if spark_t == "string" and isinstance(v, str):
-                return True, v
-            return False, None
-
-        by_schema: dict[int, list[dict]] = defaultdict(list)
-        for e in entries:
-            by_schema[int(e["schema_id"])].append(e)
-        dfs = []
-        for schema_id, es in sorted(by_schema.items()):
-            paths = [e["path"] for e in es]
-            g = spark.read.parquet(*paths)
-            if with_meta:
-                g = g.withColumn("_file", norm(F.col("_metadata.file_path"))).withColumn(
-                    "_pos", F.col("_metadata.row_index")
-                )
-            written_by_id = {
-                int(f["id"]): f["name"]
-                for f in self._schema_by_id(schema_id).get("fields", [])
-            }
-            # fields served from the data vs reconstituted per file
-            from_part = []
-            for f in cur_fields:
-                wname = written_by_id.get(int(f["id"]))
-                if wname is None or wname not in g.columns:
-                    from_part.append(f)
-            rows = []
-            for e in es:
-                part = e.get("partition") or {}
-                part_by_cur = {
-                    spec_to_cur[spec]: v for spec, v in part.items() if spec in spec_to_cur
-                }
-                vals = [e["path"], True]
-                for f in from_part:
-                    name = f["name"]
-                    spark_t = self._ICE_TO_SPARK.get(str(f.get("type") or ""), "string")
-                    ice_t = cur_to_ice_t.get(name, str(f.get("type") or ""))
-                    ok, v = typed(part_by_cur.get(name), ice_t, spark_t)
-                    if not ok:
-                        return None  # exactness first: old union shape
-                    vals.append(v)
-                rows.append(tuple(vals))
-            if from_part:
-                ddl = ", ".join(
-                    ["__ice_path string", "__ice_ok boolean"]
-                    + [
-                        f"__ice_pv_{i} {self._ICE_TO_SPARK.get(str(f.get('type') or ''), 'string')}"
-                        for i, f in enumerate(from_part)
-                    ]
-                )
-                mdf = spark.createDataFrame(rows, ddl)
-                key = F.col("_file") if with_meta else norm(F.col("_metadata.file_path"))
-                g = g.withColumn("__ice_path", key).join(
-                    F.broadcast(mdf), on="__ice_path", how="left"
-                )
-            pv_idx = {f["name"]: i for i, f in enumerate(from_part)}
-            sel = []
-            for f in cur_fields:
-                wname = written_by_id.get(int(f["id"]))
-                spark_t = self._ICE_TO_SPARK.get(str(f.get("type") or ""), "string")
-                if wname is not None and wname in g.columns:
-                    sel.append(F.col(wname).alias(f["name"]))
-                else:
-                    i = pv_idx[f["name"]]
-                    col = F.col(f"__ice_pv_{i}")
-                    if i == 0:
-                        # loud guard: a scan path missing from the
-                        # mapping means the normalization diverged —
-                        # never silently null a reconstituted column
-                        col = F.when(
-                            F.col("__ice_ok").isNull(),
-                            F.raise_error(
-                                F.lit(
-                                    "iceberg assemble: scan file path not in the "
-                                    "manifest mapping (path normalization mismatch)"
-                                )
-                            ).cast(spark_t),
-                        ).otherwise(col)
-                    sel.append(col.cast(spark_t).alias(f["name"]))
-            if with_meta:
-                sel += [F.col("_file"), F.col("_pos")]
-            dfs.append(g.select(*sel))
-        return reduce(DataFrame.unionByName, dfs)
-
     def _assemble(self, spark: SparkSession, entries: list[dict], with_meta: bool) -> DataFrame:
         """Union the data files resolved to the CURRENT schema: files
         written under an older schema get their columns renamed by
         FIELD ID (renames) and missing fields null-filled (adds) — the
         spec's read-time schema resolution. One spark.read per distinct
         written schema, so Catalyst still plans each group as a plain
-        multi-file parquet scan with pushdown intact. `with_meta` keeps
-        (_file, _pos) from the parquet metadata columns for the
-        delete-application joins (captured per group: _metadata does
-        not survive a union)."""
+        multi-file parquet scan with pushdown intact. A current field
+        the written files lack is reconstituted from each file's
+        identity-partition record (metadata-only partitioning, the
+        Flink shape that OMITS the source column from the parquet), via
+        `plans.layout.attach_file_values`. `with_meta` keeps
+        (_file, _pos) row addresses for the delete-application joins
+        (captured per group: `_metadata` does not survive a union)."""
         from collections import defaultdict
         from functools import reduce
 
         from pyspark.sql import functions as F
 
-        norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
         cur_id = int(self._meta.get("current-schema-id", 0))
         cur_fields = self._schema_by_id(cur_id).get("fields", [])
-        # group by (written schema, partition tuple): the tuple matters
-        # because metadata-only identity partitioning (Flink shape) may
-        # OMIT the source column from the parquet — it must then be
-        # reconstituted as a per-group constant from the manifest's
-        # partition record. Group count = schemas x live partitions
-        # touched, not files.
-        part_fields = self._partition_fields()
-        spec_to_cur = {spec: cur for _, spec, cur, _ in part_fields}
-        cur_to_ice_t = {cur: typ for _, _, cur, typ in part_fields}
-        # r15 (guide §6/§7.3): grouping by (schema, partition tuple)
-        # built one scan branch per live partition — O(partitions) plan
-        # nodes whose analysis + per-task plan deserialization dominated
-        # partitioned reads (a 147-day fixture: ~40 s for 295 tiny
-        # files). Partition-reconstituted fields now come from a
-        # BROADCAST (file -> typed value) mapping joined on the scan's
-        # normalized `_metadata.file_path`, so each written schema is
-        # ONE multi-file scan; the typed conversion is the same
-        # epoch-days/epoch-micros arithmetic, run per file on the
-        # driver. Values the fast path cannot convert exactly fall back
-        # to the per-tuple union (the old exact shape).
-        fast = self._assemble_mapped(spark, entries, with_meta, cur_fields, spec_to_cur, cur_to_ice_t)
-        if fast is not None:
-            return fast
-        groups: dict[tuple, list[str]] = defaultdict(list)
-        part_by_key: dict[tuple, dict] = {}
+        spec_to_cur = {spec: cur for _, spec, cur, _ in self._partition_fields()}
+        by_schema: dict[int, list[dict]] = defaultdict(list)
         for e in entries:
-            part = e.get("partition") or {}
-            key = (int(e["schema_id"]), tuple(sorted(part.items())))
-            groups[key].append(e["path"])
-            part_by_key[key] = part
+            by_schema[int(e["schema_id"])].append(e)
+        meta = ["_file", "_pos"] if with_meta else []
         dfs = []
-        for key, paths in sorted(groups.items()):
-            schema_id, _ = key
-            part = part_by_key[key]
-            g = spark.read.parquet(*paths)
+        for schema_id, es in sorted(by_schema.items()):
+            g = spark.read.parquet(*[e["path"] for e in es])
             if with_meta:
-                g = g.withColumn("_file", norm(F.col("_metadata.file_path"))).withColumn(
+                g = g.withColumn("_file", scan_file_key()).withColumn(
                     "_pos", F.col("_metadata.row_index")
                 )
-            written_by_id = {
+            if not cur_fields:  # metadata without schemas: passthrough
+                dfs.append(g)
+                continue
+            written = {
                 int(f["id"]): f["name"]
                 for f in self._schema_by_id(schema_id).get("fields", [])
             }
-            part_by_cur = {
-                spec_to_cur[spec]: v for spec, v in part.items() if spec in spec_to_cur
+            stored = {f["name"]: written.get(int(f["id"])) for f in cur_fields}
+            g = g.select(
+                *[F.col(stored[n]).alias(n) for n in stored if stored[n] in g.columns], *meta
+            )
+            values = {
+                e["path"]: {
+                    spec_to_cur[spec]: v
+                    for spec, v in (e.get("partition") or {}).items()
+                    if spec in spec_to_cur
+                }
+                for e in es
             }
-            sel = []
-            for f in cur_fields if cur_fields else [{"id": -1}]:
-                if not cur_fields:
-                    break
-                wname = written_by_id.get(int(f["id"]))
-                spark_t = self._ICE_TO_SPARK.get(str(f.get("type") or ""), "string")
-                if wname is not None and wname in g.columns:
-                    sel.append(F.col(wname).alias(f["name"]))
-                elif f["name"] in part_by_cur and part_by_cur[f["name"]] is not None:
-                    # identity partition value reconstituted as a
-                    # constant — the column is metadata, not bytes.
-                    # Iceberg stores date partitions as days-since-epoch
-                    # ints and timestamps as micros longs; Spark's
-                    # int->date cast is invalid and long->timestamp
-                    # means SECONDS, so both need explicit conversion.
-                    v = part_by_cur[f["name"]]
-                    ice_t = cur_to_ice_t.get(f["name"], str(f.get("type") or ""))
-                    if ice_t == "date" and isinstance(v, int):
-                        lit = F.date_add(F.lit("1970-01-01").cast("date"), v)
-                    elif ice_t in ("timestamp", "timestamptz") and isinstance(v, int):
-                        lit = F.timestamp_micros(F.lit(v))
-                    else:
-                        lit = F.lit(v).cast(spark_t)
-                    sel.append(lit.alias(f["name"]))
-                else:
-                    sel.append(F.lit(None).cast(spark_t).alias(f["name"]))
-            if not cur_fields:  # metadata without schemas: passthrough
-                sel = [F.col(c) for c in g.columns if c not in ("_file", "_pos")]
-            if with_meta:
-                sel += [F.col("_file"), F.col("_pos")]
-            dfs.append(g.select(*sel))
+            g = attach_file_values(
+                g,
+                values,
+                [
+                    (f["name"], self._ICE_TO_SPARK.get(str(f.get("type") or ""), T.StringType()))
+                    for f in cur_fields
+                    if f["name"] not in g.columns
+                ],
+            )
+            dfs.append(g.select(*[f["name"] for f in cur_fields], *meta))
         return reduce(DataFrame.unionByName, dfs)
 
     def added_files(self, snapshot_id: int) -> list[str]:
@@ -1571,8 +1404,7 @@ class IcebergTable:
                     for v in _pq.read_table(dp, columns=["file_path"]).column(
                         "file_path"
                     ).to_pylist():
-                        victims.add(re.sub(r"^file:/+", "/", str(v)))
-                norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
+                        victims.add(file_key(str(v)))
                 prev = self.read(
                     spark,
                     snapshot_id=int(parent),
@@ -1582,7 +1414,7 @@ class IcebergTable:
                 dd = (
                     spark.read.parquet(*added_pos)
                     .select(
-                        norm(F.col("file_path")).alias("_file"),
+                        file_key(F.col("file_path")).alias("_file"),
                         F.col("pos").alias("_pos"),
                     )
                     .dropDuplicates()
@@ -2036,9 +1868,8 @@ class IcebergTable:
             # anti-join — no shuffle added to the read path.
             from pyspark.sql import functions as F
 
-            norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
             dd = spark.read.parquet(*dels).select(
-                norm(F.col("file_path")).alias("_file"), F.col("pos").alias("_pos")
+                file_key(F.col("file_path")).alias("_file"), F.col("pos").alias("_pos")
             )
             df = df.join(F.broadcast(dd), on=["_file", "_pos"], how="left_anti")
         if eq:
@@ -2061,7 +1892,7 @@ class IcebergTable:
             from pyspark.sql import functions as F
 
             cur_names = self._field_names_by_id()
-            seq_rows = [(p, int(s)) for p, s in self.data_files_with_seq(snapshot_id)]
+            seq_rows = [(file_key(p), int(s)) for p, s in self.data_files_with_seq(snapshot_id)]
             seq_df = spark.createDataFrame(seq_rows, "_file string, _dseq long")
             df = df.join(F.broadcast(seq_df), on="_file", how="left")
             grouped: dict[tuple[str, ...], list] = defaultdict(list)
@@ -3479,7 +3310,7 @@ class IcebergFixtureWriter:
         # Equality deletes (content=2) apply by value+sequence, not
         # path — they pass through untouched.
         rewritten_paths = {
-            _norm_local(p) for v in rewrite_groups.values() for _e, p, _s, _q in v
+            file_key(p) for v in rewrite_groups.values() for _e, p, _s, _q in v
         }
         import pyarrow as _pa
         import pyarrow.parquet as _pq
@@ -3491,7 +3322,7 @@ class IcebergFixtureWriter:
                 continue
             dpath = t._resolve(dfile["file_path"])
             dtab = _pq.read_table(dpath)
-            paths = [_norm_local(str(v)) for v in dtab.column("file_path").to_pylist()]
+            paths = [file_key(str(v)) for v in dtab.column("file_path").to_pylist()]
             keep_rows = [i for i, p in enumerate(paths) if p not in rewritten_paths]
             if len(keep_rows) == len(paths):
                 new_entries.append(e)
@@ -3560,7 +3391,7 @@ class IcebergFixtureWriter:
                     others.append((e, seq))
                     if content == 0:
                         live_data_paths.add(
-                            _norm_local(str(t._resolve(e["data_file"]["file_path"])))
+                            file_key(str(t._resolve(e["data_file"]["file_path"])))
                         )
         result = {
             "delete_files_before": len(pos_deletes),
@@ -3583,7 +3414,7 @@ class IcebergFixtureWriter:
             tables.append(dtab.select(["file_path", "pos"]))
         merged = _pa.concat_tables(tables)
         # drop dangling rows + dedupe (file, pos); sort for locality
-        norm = [_norm_local(str(v)) for v in merged.column("file_path").to_pylist()]
+        norm = [file_key(str(v)) for v in merged.column("file_path").to_pylist()]
         keep_mask = [p in live_data_paths for p in norm]
         merged = merged.filter(_pa.array(keep_mask))
         if merged.num_rows:
@@ -3957,7 +3788,7 @@ class IcebergFixtureWriter:
         if retain_prior is None:
             retain_prior = operation in ("append", "delete")
         if prior_ml and retain_prior:
-            _, rows = decode_container(Path(_strip_uri(prior_ml)).read_bytes())
+            _, rows = decode_container(Path(file_key(prior_ml)).read_bytes())
             for r in rows:
                 r.setdefault("partitions", None)  # rows from pre-summary containers
             new_rows = rows + [

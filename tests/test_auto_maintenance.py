@@ -11,6 +11,7 @@ from cdf_spark.package.maintenance import (
     plan_maintenance,
     run_maintenance,
 )
+from cdf_spark.plans.layout import scan_file_key
 from cdf_spark.sources.delta import DeltaFixtureWriter, DeltaTable
 from cdf_spark.sources.hudi import HudiFixtureWriter, HudiTable
 from cdf_spark.sources.iceberg import IcebergFixtureWriter, IcebergTable
@@ -242,7 +243,7 @@ def test_pos_delete_compaction_planned_and_converges(spark, tmp_path, orders):
     t = IcebergTable(tmp_path / "t")
     located = (
         t.read(spark, snapshot_id=sid)
-        .withColumn("_f", F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/"))
+        .withColumn("_f", scan_file_key())
         .withColumn("_p", F.col("_metadata.row_index"))
         .filter(F.col("o_orderkey") <= 8)
         .select("_f", "_p", "o_orderkey")

@@ -10,6 +10,7 @@ import json
 
 import pytest
 
+from cdf_spark.plans.layout import scan_file_key
 from cdf_spark.positions import TableSnapshotPosition
 from cdf_spark.sources.iceberg import (
     IcebergError,
@@ -216,7 +217,7 @@ def test_positional_deletes_merge_on_read(spark, tmp_path, orders):
     # the same metadata columns the reader uses
     located = (
         t.read(spark, snapshot_id=s1)
-        .withColumn("_f", F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/"))
+        .withColumn("_f", scan_file_key())
         .withColumn("_p", F.col("_metadata.row_index"))
         .filter(F.col("o_orderkey").isin(5, 10, 15))
         .select("_f", "_p")
@@ -729,7 +730,7 @@ def test_rewrite_position_deletes_consolidates(spark, tmp_path, orders):
         return [
             (r._f, r._p)
             for r in t.read(spark, snapshot_id=sid)
-            .withColumn("_f", F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/"))
+            .withColumn("_f", scan_file_key())
             .withColumn("_p", F.col("_metadata.row_index"))
             .filter(F.col("o_orderkey").isin(*keys))
             .select("_f", "_p")

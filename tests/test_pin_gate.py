@@ -49,6 +49,27 @@ def test_pin_worthwhile_respects_the_gate(spark, gate, tmp_path):
     assert pin_worthwhile(src) is True
 
 
+def test_malformed_gate_raises_and_names_the_key(spark, gate, tmp_path):
+    """A bad gate conf is a configuration error, not a lazy plan: it
+    raises naming the key, while unreadable plan statistics still
+    fall back to the lazy shape."""
+    spark.range(0, 10).write.mode("overwrite").parquet(str(tmp_path / "t"))
+    src = spark.read.parquet(str(tmp_path / "t"))
+    for bad in ("256MiB", "", "1e9"):
+        gate.set(PIN_GATE_CONF, bad)
+        with pytest.raises(ValueError, match=PIN_GATE_CONF.replace(".", r"\.")):
+            pin_worthwhile(src)
+
+    class NoStats:
+        sparkSession = spark
+        _jdf = None  # any stats access fails
+
+    gate.set(PIN_GATE_CONF, "1")
+    assert pin_worthwhile(NoStats()) is False
+    gate.set(PIN_GATE_CONF, "0")  # forced on: no stats read at all
+    assert pin_worthwhile(NoStats()) is True
+
+
 def test_pin_if_expensive_lazy_below_gate_pinned_above(spark, gate, tmp_path):
     spark.range(0, 100).write.mode("overwrite").parquet(str(tmp_path / "t"))
     src = spark.read.parquet(str(tmp_path / "t"))

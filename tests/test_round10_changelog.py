@@ -22,6 +22,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from cdf_spark.plans.layout import scan_file_key
 from cdf_spark.sources.iceberg import IcebergFixtureWriter, IcebergTable
 
 
@@ -59,7 +60,7 @@ def test_pos_delete_preimage_reads_only_named_files(spark, tmp_path, orders, mon
     # victims: rows 150-160 — live in exactly one parent data file
     located = (
         t.read(spark, snapshot_id=s_parent)
-        .withColumn("_f", F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/"))
+        .withColumn("_f", scan_file_key())
         .withColumn("_p", F.col("_metadata.row_index"))
         .filter((F.col("o_orderkey") > 150) & (F.col("o_orderkey") <= 160))
         .select("_f", "_p")

@@ -16,6 +16,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from cdf_spark.plans.layout import scan_file_key
 from cdf_spark.sources.delta import (
     DeltaError,
     DeltaFixtureWriter,
@@ -145,9 +146,7 @@ def test_changelog_pos_delete_preimages(spark, tmp_path, orders):
     t = IcebergTable(tmp_path / "t")
     located = (
         t.read(spark, snapshot_id=s1)
-        .withColumn(
-            "_f", F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
-        )
+        .withColumn("_f", scan_file_key())
         .withColumn("_p", F.col("_metadata.row_index"))
         .filter(F.col("o_orderkey").isin(3, 7, 11))
         .select("_f", "_p", "o_orderkey")

@@ -194,3 +194,16 @@ def test_zone_map_version_pruning(spark, tmp_path, dest):
     # all versions pruned -> empty result, schema intact
     none = dest.read(spark, filters=[("k", "gt", 10_000)])
     assert none.count() == 0 and set(none.columns) == {"k", "s", "val"}
+
+
+@pytest.mark.parametrize("col", ["v", "V", "_cdf_version"])
+def test_reserved_version_column_is_refused(spark, tmp_path, dest, col):
+    """`data/v=N/` makes `v` a hive partition column that reads rename
+    to `_cdf_version`: a user column of either name would silently
+    become the version number, so commit refuses it and writes
+    nothing."""
+    pkg = _pkg(spark, tmp_path, "r", [(1, "a", 10)], schema=f"k long, s string, {col} long")
+    with pytest.raises(ValueError, match=f"'{col}'"):
+        dest.commit(spark, pkg, WriteDisposition.APPEND)
+    assert not (dest.table_path / "data").exists()
+    assert not (dest.table_path / "_version.json").exists()

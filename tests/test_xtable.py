@@ -185,8 +185,8 @@ def _parity(a, b) -> int:
 def test_d2i_partitioned_reconstitutes_from_metadata(spark, orders, tmp_path):
     """r11: partitioned Delta translates — add.partitionValues become
     Iceberg identity-spec partition records; the linked files omit the
-    partition column and the Iceberg reader reconstitutes it as a
-    per-group constant (the Flink metadata-only shape). Zero copy."""
+    partition column and the Iceberg reader reconstitutes it from each
+    file's partition record (the Flink metadata-only shape). Zero copy."""
     import os
 
     from cdf_spark.package.xtable import delta_to_iceberg
