@@ -38,6 +38,13 @@ from .stats import _observe_count, dataset_value_hash, profile_and_hash
 SEGMENT_TARGET_ROWS = 4 * 1024 * 1024  # reference: 4 Mi rows per segment
 
 
+def content_address(resource: str, schema: str, values: str, plan: str, contract: str) -> str:
+    """A package's id: a hash of its resource, schema fingerprint, value
+    hash, plan hash and contract hash (values, never file bytes)."""
+    doc = {"resource": resource, "schema": schema, "values": values, "plan": plan, "contract": contract}
+    return "pkg-" + hashlib.sha256(json.dumps(doc, sort_keys=True).encode()).hexdigest()[:24]
+
+
 @dataclass
 class PackageResult:
     package_id: str
@@ -50,6 +57,24 @@ class PackageResult:
 
     def data_path(self) -> str:
         return str(Path(self.path) / "data")
+
+    def segments(self) -> list[str]:
+        """Paths of the package's data segments, as its manifest lists them."""
+        return [str(Path(self.data_path()) / s) for s in self.manifest["segments"]]
+
+    def arrow_schema(self):
+        """The Arrow schema of the package's first segment."""
+        import pyarrow.parquet as pq
+
+        return pq.read_schema(self.segments()[0])
+
+    def addressed(self) -> bool:
+        """True when the package id is the content address of what the
+        package says it holds; a manifest edited after the build is not."""
+        m = self.manifest
+        return self.package_id == content_address(
+            m["resource_id"], self.schema_fingerprint, self.value_hash, m["plan_hash"], m["contract_hash"]
+        )
 
 
 class PackageBuilder:
@@ -155,18 +180,7 @@ class PackageBuilder:
                 )
                 rows_quar = int(observed_get(qobs)["rows"])
 
-        package_id = "pkg-" + hashlib.sha256(
-            json.dumps(
-                {
-                    "resource": self.resource_id,
-                    "schema": schema_fp,
-                    "values": value_hash,
-                    "plan": plan_hash,
-                    "contract": contract_hash,
-                },
-                sort_keys=True,
-            ).encode()
-        ).hexdigest()[:24]
+        package_id = content_address(self.resource_id, schema_fp, value_hash, plan_hash, contract_hash)
 
         # evidence
         rows = stats["__table"]["rows"]

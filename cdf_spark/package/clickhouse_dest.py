@@ -36,7 +36,6 @@ from __future__ import annotations
 
 import uuid
 from collections.abc import Callable, Iterable
-from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -141,14 +140,6 @@ class ClickHouseDestination:
         self.destination_uri = destination_uri or f"clickhouse://#{table}"
 
     # -- helpers ----------------------------------------------------------
-    def _segments(self, package: PackageResult) -> list[str]:
-        return sorted(str(p) for p in Path(package.data_path()).glob("*.parquet"))
-
-    def _arrow_schema(self, package: PackageResult):
-        import pyarrow.parquet as pq
-
-        return pq.read_schema(self._segments(package)[0])
-
     def _ddl(self, name: str, schema) -> str:
         cols = ", ".join(
             f"{_q(f.name)} {clickhouse_type(f.type, nullable=f.name not in self.merge_keys)}"
@@ -167,7 +158,7 @@ class ClickHouseDestination:
 
         names = [f.name for f in schema]
         total = 0
-        for seg in self._segments(package):
+        for seg in package.segments():
             pf = pq.ParquetFile(seg)
             for batch in pf.iter_batches(batch_size=self.batch_rows):
                 pyd = batch.to_pydict()
@@ -186,7 +177,7 @@ class ClickHouseDestination:
         package: PackageResult,
         disposition: WriteDisposition = WriteDisposition.APPEND,
     ) -> Receipt:
-        schema = self._arrow_schema(package)
+        schema = package.arrow_schema()
         t = _q(self.table)
         tr = self.transport_factory()
         stg = f"_cdf_stage_{uuid.uuid4().hex[:8]}"
@@ -241,7 +232,7 @@ class ClickHouseDestination:
     def verify(self, spark: SparkSession, receipt: Receipt, package: PackageResult) -> Receipt:
         """The rules of `dbapi_dest.verify_sql`, in the grouped-count
         construction (EXCEPT ALL support varies by CH version)."""
-        schema = self._arrow_schema(package)
+        schema = package.arrow_schema()
         names = [f.name for f in schema]
         cols = ", ".join(_q(n) for n in names)
         t = _q(self.table)

@@ -33,7 +33,6 @@ import decimal as _decimal
 import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
-from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -248,14 +247,6 @@ class DbApiDestination:
         self.destination_uri = destination_uri or f"dbapi+{dialect.name}://#{table}"
 
     # -- helpers ----------------------------------------------------------
-    def _segments(self, package: PackageResult) -> list[str]:
-        return sorted(str(p) for p in Path(package.data_path()).glob("*.parquet"))
-
-    def _arrow_schema(self, package: PackageResult):
-        import pyarrow.parquet as pq
-
-        return pq.read_schema(self._segments(package)[0])
-
     def _ddl_columns(self, schema) -> str:
         return ", ".join(f"{_q(f.name)} {self.dialect.sql_type(f.type)}" for f in schema)
 
@@ -280,7 +271,7 @@ class DbApiDestination:
         insert = f"INSERT INTO {_q(into)} ({cols}) VALUES ({ph})"
         names = [f.name for f in schema]
         total = 0
-        for seg in self._segments(package):
+        for seg in package.segments():
             pf = pq.ParquetFile(seg)
             for batch in pf.iter_batches(batch_size=self.batch_rows):
                 pyd = batch.to_pydict()
@@ -299,7 +290,7 @@ class DbApiDestination:
         package: PackageResult,
         disposition: WriteDisposition = WriteDisposition.APPEND,
     ) -> Receipt:
-        schema = self._arrow_schema(package)
+        schema = package.arrow_schema()
         t = _q(self.table)
         con = self.connect()
         try:
@@ -340,7 +331,7 @@ class DbApiDestination:
 
     # -- verification ------------------------------------------------------
     def verify(self, spark: SparkSession, receipt: Receipt, package: PackageResult) -> Receipt:
-        schema = self._arrow_schema(package)
+        schema = package.arrow_schema()
         stg = f"_cdf_verify_{uuid.uuid4().hex[:8]}"
         con = self.connect()
         try:

@@ -71,9 +71,6 @@ class DeltaDestination:
         self.uniform = uniform
         self.last_uniform_sync: dict | None = None
 
-    def _segments(self, package: PackageResult) -> list[str]:
-        return sorted(str(p) for p in Path(package.data_path()).glob("*.parquet"))
-
     def commit(
         self,
         spark: SparkSession,
@@ -106,7 +103,7 @@ class DeltaDestination:
         package: PackageResult,
         disposition: WriteDisposition,
     ) -> Receipt:
-        segments = self._segments(package)
+        segments = package.segments()
         w = DeltaFixtureWriter(
             self.table_path,
             checkpoint_interval=self.checkpoint_interval,

@@ -95,9 +95,6 @@ class IcebergDestination:
         ]
         self.stage_branch = stage_branch
 
-    def _segments(self, package: PackageResult) -> list[str]:
-        return sorted(str(p) for p in Path(package.data_path()).glob("*.parquet"))
-
     def commit(
         self,
         spark: SparkSession,
@@ -134,7 +131,7 @@ class IcebergDestination:
         package: PackageResult,
         disposition: WriteDisposition,
     ) -> Receipt:
-        segments = self._segments(package)
+        segments = package.segments()
         # declared partition_by seeds a NEW table's spec; an existing
         # table rehydrates its own spec over it (existing wins)
         w = IcebergFixtureWriter(self.table_path, partition_by=self.partition_by)

@@ -8,22 +8,24 @@ commits into a destination under a write disposition; the destination
 returns a receipt; the checkpoint advances ONLY after the receipt
 verifies. Positions (cursors/frontiers) ride on the checkpoint.
 
-Every destination builds its receipt with `Receipt.issue`. The
-verification rules live in two places, one per backend: `verify_frame`
-here for destinations Spark reads back as a frame, and
+Every destination builds its receipt with `Receipt.issue`. Receipts
+verify by `verify_frame` here for destinations Spark reads back as a
+frame, by `ParquetDestination.verify`'s byte rule, and by
 `dbapi_dest.verify_sql` for the SQL sinks.
 
-Without Delta in this image, destinations are parquet directories:
-  append   -> write new files into the table dir (at-least-once)
-  replace  -> overwrite the table dir (effectively-once per target)
-  merge    -> null-safe keyed merge, rewrite (effectively-once per key)
+`ParquetDestination` lands a package's segments by byte copy:
+  append   -> into the table dir (at-least-once)
+  replace  -> as the table's only files (effectively-once per target)
+  merge    -> beside the rewritten rows whose key it lacks (effectively-once per key)
 The honest delivery guarantee is recorded on every receipt
 (`crates/cdf-kernel/src/destination.rs:427-433`).
 """
 
 from __future__ import annotations
 
+import filecmp
 import json
+import shutil
 import time
 import uuid
 from collections.abc import Callable
@@ -31,12 +33,15 @@ from dataclasses import asdict, dataclass, field
 from functools import reduce
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..sources.base import WriteDisposition
+from ..types.schema import CanonicalSchema
 from .builder import PackageResult
-from .stats import dataset_value_hash, parquet_row_count
+from .stats import data_files, dataset_value_hash, parquet_row_count
 
 
 @dataclass
@@ -91,7 +96,8 @@ def verify_frame(
     Two known gaps. The keyless APPEND bound is true of any package no
     larger than the table, so it does not prove *this* package landed.
     MERGE and keyed APPEND prove the staged keys are present, not their
-    values (the SQL backend, `dbapi_dest.verify_sql`, proves values).
+    values; Parquet's byte rule (`ParquetDestination.verify`) and the
+    SQL backend (`dbapi_dest.verify_sql`) prove values.
     """
     d = WriteDisposition(receipt.disposition)
     if d is WriteDisposition.REPLACE:
@@ -134,56 +140,44 @@ class ParquetDestination:
         disposition: WriteDisposition = WriteDisposition.APPEND,
     ) -> Receipt:
         if disposition is WriteDisposition.APPEND:
-            self._copy_segments(package, clear_first=False)
+            self._copy_segments(package, self.table_path)
         elif disposition is WriteDisposition.REPLACE:
-            self._copy_segments(package, clear_first=True)
+            self._publish(package, None)
         elif disposition is WriteDisposition.MERGE:
-            df = spark.read.parquet(package.data_path())
             if not self.merge_keys:
                 raise ValueError("merge disposition requires merge_keys")
-            self._merge(spark, df)
+            files = data_files(self.table_path)
+            self._publish(package, self._survivors(spark, package, files[0]) if files else None)
         else:
             raise ValueError(f"disposition {disposition} not supported by ParquetDestination")
 
         return Receipt.issue(package, disposition, str(self.table_path))
 
-    def _copy_segments(self, package: PackageResult, clear_first: bool) -> None:
-        """Package segments are already canonical parquet — commit by
-        file copy (the reference's bulk `canonical_segment_scan` path:
-        no decode/re-encode, bounded by device write). Segment names
-        are prefixed with the package id so appends never collide and
-        replays are idempotent per (package, segment)."""
-        import shutil
+    @staticmethod
+    def _segments(package: PackageResult) -> dict[str, str]:
+        """Landed name -> package segment. The package-id prefix keeps
+        appends from colliding and replays idempotent per segment."""
+        return {f"{package.package_id}-{Path(s).name}": s for s in package.segments()}
 
-        src = Path(package.data_path())
-        if clear_first and self.table_path.exists():
-            shutil.rmtree(self.table_path)
-        self.table_path.mkdir(parents=True, exist_ok=True)
-        for seg in sorted(src.glob("*.parquet")):
-            shutil.copy2(seg, self.table_path / f"{package.package_id}-{seg.name}")
+    def _copy_segments(self, package: PackageResult, into: Path) -> None:
+        """Segments are canonical parquet: no decode/re-encode, bounded by
+        device write (the reference's bulk `canonical_segment_scan` path)."""
+        into.mkdir(parents=True, exist_ok=True)
+        for name, seg in self._segments(package).items():
+            shutil.copy2(seg, into / name)
 
-    def _merge(self, spark: SparkSession, staged: DataFrame) -> None:
-        """Null-safe keyed merge: target rows whose key appears in the
-        staged batch are replaced (DELETE..USING + INSERT,
-        `crates/cdf-dest-duckdb/src/commit.rs:150-216`). The rewrite is
-        near-atomic: the merged table is fully materialized in a staging
-        dir, the live dir is renamed aside, staging renames into place,
-        and only then is the old copy deleted — at every instant a
-        complete copy of the table exists on disk."""
-        if self.table_path.exists():
-            target = spark.read.parquet(str(self.table_path))
-            keys = staged.select(*self.merge_keys).distinct()
-            cond = [target[k].eqNullSafe(keys[k]) for k in self.merge_keys]
-            joined = cond[0]
-            for c in cond[1:]:
-                joined = joined & c
-            survivors = target.join(F.broadcast(keys), on=joined, how="left_anti")
-            merged = survivors.unionByName(staged)
-        else:
-            merged = staged
+    def _publish(self, package: PackageResult, survivors: DataFrame | None) -> None:
+        """Replace the table with `survivors` plus the package's segments,
+        near-atomically: the new table is materialized in a staging dir
+        (cleared first: a killed commit's leftovers never land), the live
+        dir is renamed aside, staging renames into place, then the old copy
+        is deleted — at every instant a complete table exists on disk."""
         tmp = self.table_path.with_name(self.table_path.name + ".staging")
-        merged.write.mode("overwrite").parquet(str(tmp))
-        import shutil
+        if tmp.exists():
+            shutil.rmtree(tmp)
+        if survivors is not None:
+            survivors.write.parquet(str(tmp))
+        self._copy_segments(package, tmp)
 
         old = self.table_path.with_name(self.table_path.name + f".old-{uuid.uuid4().hex[:8]}")
         if self.table_path.exists():
@@ -198,11 +192,50 @@ class ParquetDestination:
         if old.exists():
             shutil.rmtree(old)
 
+    def _survivors(self, spark: SparkSession, package: PackageResult, first: str) -> DataFrame:
+        """Target rows whose key is not in the package (null-safe;
+        `crates/cdf-dest-duckdb/src/commit.rs:150-216`). Package keys are
+        read with its recorded schema; copied segments are never widened,
+        so a package whose columns differ from the target's is refused.
+        The target's schema is the one Spark's inference would read from
+        one footer, taken without a job where Spark recorded it there."""
+        recorded = (pq.read_metadata(first).metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+        reader = spark.read.schema(T.StructType.fromJson(json.loads(recorded))) if recorded else spark.read
+        target = reader.parquet(str(self.table_path))
+        schema = CanonicalSchema.from_json((Path(package.path) / "schema" / "schema.json").read_text())
+        have = {f.name: f.type for f in CanonicalSchema.from_spark(target.schema).fields}
+        got = {f.name: f.type for f in schema.fields}
+        for name in sorted(have.keys() | got.keys()):
+            if have.get(name) != got.get(name):
+                raise ValueError(
+                    f"MERGE into {self.table_path} refused: column {name!r} is "
+                    f"{got.get(name, 'missing')} in the package but {have.get(name, 'missing')} in the target"
+                )
+        keys = spark.read.schema(schema.to_spark()).parquet(package.data_path()).select(*self.merge_keys)
+        cond = reduce(lambda a, b: a & b, [target[k].eqNullSafe(keys[k]) for k in self.merge_keys])
+        return target.join(F.broadcast(keys), on=cond, how="left_anti")
+
     def verify(self, spark: SparkSession, receipt: Receipt, package: PackageResult) -> Receipt:
-        return verify_frame(
-            spark, receipt, package, lambda: self.read(spark), self.merge_keys,
-            count=lambda: parquet_row_count(self.table_path),
+        """REPLACE, MERGE and keyed APPEND verify by bytes, with no Spark
+        job: the package is content-addressed, and each manifest segment
+        is in the table as a byte-identical `{package_id}-{segment}`;
+        under REPLACE they are its only data files. Keyless APPEND keeps
+        `verify_frame`'s count bound."""
+        d = WriteDisposition(receipt.disposition)
+        keyed = self.merge_keys and d in (WriteDisposition.MERGE, WriteDisposition.APPEND)
+        if not keyed and d is not WriteDisposition.REPLACE:
+            return verify_frame(
+                spark, receipt, package, lambda: self.read(spark), self.merge_keys,
+                count=lambda: parquet_row_count(self.table_path),
+            )
+        landed = self._segments(package)
+        present = {str(Path(f).relative_to(self.table_path)) for f in data_files(self.table_path)}
+        placed = present == landed.keys() if d is WriteDisposition.REPLACE else landed.keys() <= present
+        filecmp.clear_cache()  # its entries are keyed by (size, mtime), which a rewrite can keep
+        receipt.verified = package.addressed() and placed and all(
+            filecmp.cmp(seg, self.table_path / name, shallow=False) for name, seg in landed.items()
         )
+        return receipt
 
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(str(self.table_path))

@@ -564,16 +564,6 @@ class PostgresCopyDestination:
         self.destination_uri = destination_uri or f"postgresql+copy://#{table}"
 
     # -- helpers ----------------------------------------------------------
-    def _segments(self, package) -> list[str]:
-        from pathlib import Path
-
-        return sorted(str(p) for p in Path(package.data_path()).glob("*.parquet"))
-
-    def _arrow_schema(self, package):
-        import pyarrow.parquet as pq
-
-        return pq.read_schema(self._segments(package)[0])
-
     def _ddl_columns(self, schema) -> str:
         return ", ".join(f"{_q(f.name)} {self.dialect.sql_type(f.type)}" for f in schema)
 
@@ -583,7 +573,7 @@ class PostgresCopyDestination:
         copy_sql = render_copy_sql(into, [f.name for f in schema])
 
         def frames():
-            for seg in self._segments(package):
+            for seg in package.segments():
                 pf = pq.ParquetFile(seg)
                 for batch in pf.iter_batches(batch_size=65536):
                     yield encode_copy_binary(batch)
@@ -596,7 +586,7 @@ class PostgresCopyDestination:
         from .ledger import Receipt
 
         disposition = disposition or WriteDisposition.APPEND
-        schema = self._arrow_schema(package)
+        schema = package.arrow_schema()
         if disposition is WriteDisposition.MERGE and not self.merge_keys:
             raise ValueError("merge disposition requires merge_keys")
         if self.distributed:
@@ -731,7 +721,7 @@ class PostgresCopyDestination:
 
         from .dbapi_dest import verify_sql
 
-        schema = self._arrow_schema(package)
+        schema = package.arrow_schema()
         stg = f"_cdf_verify_{uuid.uuid4().hex[:8]}"
         tr = self.transport_factory()
         try:

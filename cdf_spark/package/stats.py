@@ -224,25 +224,26 @@ def footer_profile(data_dir, schema) -> tuple[dict[str, dict], list[str]]:
     return out, incomplete
 
 
-def parquet_row_count(path) -> int:
-    """Row count of a parquet dataset read from its footers: O(files)
-    driver time and no Spark job. Data files are listed the way Spark's
-    file index lists them — recursively, skipping every name that
-    starts with `_` or `.` (`_SUCCESS`, `.crc` checksums,
-    `_temporary`) — so the result equals
-    `spark.read.parquet(path).count()`, which reads the same footers.
-    A missing path counts 0 rows."""
+def data_files(path) -> list[str]:
+    """A parquet dataset's files, listed as Spark's file index lists
+    them: recursively, skipping every name that starts with `_` or `.`
+    (`_SUCCESS`, `.crc` checksums, `_temporary`)."""
     import os
 
-    import pyarrow.parquet as pq
-
-    total = 0
+    out = []
     for root, dirs, names in os.walk(path):
         dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for n in names:
-            if not n.startswith(("_", ".")):
-                total += pq.read_metadata(os.path.join(root, n)).num_rows
-    return total
+        out += [os.path.join(root, n) for n in names if not n.startswith(("_", "."))]
+    return out
+
+
+def parquet_row_count(path) -> int:
+    """Row count from the footers of `data_files(path)`: O(files) driver
+    time, no Spark job, and equal to `spark.read.parquet(path).count()`.
+    A missing path counts 0 rows."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in data_files(path))
 
 
 def _profile_aggs(df: DataFrame, with_hash: bool = True):

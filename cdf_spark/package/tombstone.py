@@ -80,8 +80,7 @@ class TombstoneParquetDestination:
         package: PackageResult,
         disposition: WriteDisposition = WriteDisposition.APPEND,
     ) -> Receipt:
-        src = Path(package.data_path())
-        segs = sorted(src.glob("*.parquet"))
+        segs = package.segments()
         # `data/v=N/` makes `v` a hive partition column, and reads
         # rename it to VERSION_COL: a user column of either name would
         # be overwritten by the version number
@@ -99,7 +98,7 @@ class TombstoneParquetDestination:
             shutil.rmtree(vdir)
         vdir.mkdir(parents=True)
         for seg in segs:
-            shutil.copy2(seg, vdir / f"{package.package_id}-{seg.name}")
+            shutil.copy2(seg, vdir / f"{package.package_id}-{Path(seg).name}")
         # carry the package's zone maps: version-level min/max lets
         # read() prune whole version dirs before Spark ever lists them
         pkg_stats = Path(package.path) / "stats" / "column_stats.json"

@@ -46,6 +46,7 @@ from .operators.dedup import dedup_keyed
 from .operators.late_data import classify_late_data
 from .package.builder import PackageBuilder, PackageResult
 from .package.ledger import CheckpointLedger, ParquetDestination, Receipt
+from .package.stats import dataset_value_hash
 from .plans.scan import ScanPlan, ScanRequest
 from .sources.base import ResourceDescriptor, WriteDisposition
 from .sources.files import FileResource
@@ -339,7 +340,10 @@ def replay_package(spark: SparkSession, package_path: str, destination: ParquetD
     """Rolling replay: re-drive a recorded package into a destination
     (`crates/cdf-runtime/src/rolling_replay.rs`). The package is the
     source of truth; no upstream read happens. Delivery follows
-    `deliver_package` with no ledger."""
+    `deliver_package` with no ledger. A package read back from disk may
+    have changed since its build, and a byte-rule verify only proves its
+    segments landed, so the receipt also needs the segments to re-hash
+    to the manifest's value hash."""
     manifest = json.loads((Path(package_path) / "manifest.json").read_text())
     pkg = PackageResult(
         package_id=manifest["package_id"],
@@ -350,4 +354,7 @@ def replay_package(spark: SparkSession, package_path: str, destination: ParquetD
         schema_fingerprint=manifest["schema_fingerprint"],
         manifest=manifest,
     )
-    return deliver_package(spark, pkg, destination, disposition, None)[0]
+    receipt = deliver_package(spark, pkg, destination, disposition, None)[0]
+    if receipt is not None and receipt.verified:
+        receipt.verified = dataset_value_hash(spark.read.parquet(pkg.data_path())) == pkg.value_hash
+    return receipt

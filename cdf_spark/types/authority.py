@@ -138,12 +138,7 @@ class SchemaAuthority:
         head = self.active()
         if head is None:
             return None
-        from .schema import CanonicalField
-
-        fields = json.loads(head.schema_json)["fields"]
-        return CanonicalSchema(
-            [CanonicalField(f["name"], f["type"], f.get("nullable", True)) for f in fields]
-        )
+        return CanonicalSchema.from_json(head.schema_json)
 
     def propose(self, schema: CanonicalSchema | T.StructType) -> SchemaVersion:
         """Register a candidate version (idempotent on fingerprint)."""

@@ -58,6 +58,13 @@ class CanonicalSchema:
             out.append(CanonicalField(name, mapped.canonical))
         return cls(out)
 
+    @classmethod
+    def from_json(cls, text: str) -> CanonicalSchema:
+        """Read back a schema rendered by `canonical_json`."""
+        return cls(
+            [CanonicalField(f["name"], f["type"], f.get("nullable", True)) for f in json.loads(text)["fields"]]
+        )
+
     def to_spark(self) -> T.StructType:
         return T.StructType(
             [

@@ -11,6 +11,8 @@ identity (Spark task ordering is nondeterministic by design).
 import json
 from pathlib import Path
 
+import pytest
+
 from cdf_spark.contracts import Contract, DomainRule, RangeRule
 from cdf_spark.expressions.ast import Col
 from cdf_spark.package.builder import PackageBuilder
@@ -157,6 +159,32 @@ def test_falsification_replay_rejects_tampered_package(spark, tmp_path):
     receipt = replay_package(
         spark, pkg.path, ParquetDestination(tmp_path / "dest"), WriteDisposition.REPLACE
     )
+    assert not receipt.verified
+
+
+@pytest.mark.parametrize("disposition", ["replace", "merge"])
+def test_falsification_replay_rejects_altered_package_data(spark, tmp_path, disposition):
+    """A package whose data changed after its build (same keys, one
+    value altered, manifest intact) must not replay under a verified
+    receipt: the destination's byte rule proves only that the altered
+    segments landed."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cdf_spark.package.ledger import ParquetDestination
+    from cdf_spark.runtime import replay_package
+    from cdf_spark.sources.base import WriteDisposition
+
+    pkg = PackageBuilder(tmp_path / "p", "kv").build(admitted=_golden_frame(spark))
+    seg = next(s for s in pkg.segments() if 1 in pq.read_table(s).column("k").to_pylist())
+    Path(seg).with_name(f".{Path(seg).name}.crc").unlink(missing_ok=True)
+    t = pq.read_table(seg)
+    amount = [11.5 if k == 1 else a for k, a in zip(t.column("k").to_pylist(), t.column("amount").to_pylist())]
+    i = t.schema.get_field_index("amount")
+    pq.write_table(t.set_column(i, "amount", pa.array(amount, pa.float64())), seg)
+
+    dest = ParquetDestination(tmp_path / "dest", merge_keys=["k"])
+    receipt = replay_package(spark, pkg.path, dest, WriteDisposition(disposition))
     assert not receipt.verified
 
 

@@ -13,15 +13,26 @@ for any package of the same size (ROADMAP item 1).
 
 ClickHouse and Postgres COPY need a live server and are not in the
 matrix.
+
+After the matrix, ParquetDestination's own cases: its byte rule rejects
+altered values and foreign files, and its MERGE commit is held to a job
+budget, refuses a package whose columns differ from the target's, and
+ignores a stale staging dir.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import sqlite3
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, replace
+from pathlib import Path
 
 import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -33,6 +44,7 @@ from cdf_spark.package.hudi_dest import HudiDestination
 from cdf_spark.package.hudi_mor_dest import HudiMorDestination
 from cdf_spark.package.iceberg_dest import IcebergDestination
 from cdf_spark.package.ledger import ParquetDestination
+from cdf_spark.package.stats import data_files
 from cdf_spark.package.tombstone import TombstoneParquetDestination
 from cdf_spark.sources.base import WriteDisposition as WD
 
@@ -148,3 +160,106 @@ def test_receipt_verifies_its_own_package(spark, packages, committed, case):
 def test_receipt_rejects_a_disjoint_package(spark, packages, committed, case):
     dest, receipt = committed(case)
     assert not dest.verify(spark, replace(receipt), _pkg(packages, case, "b")).verified
+
+
+# -- ParquetDestination: the byte rule and the MERGE commit ------------------
+
+
+def _rewrite_one_value(table) -> None:
+    """Rewrite the first non-empty data file of ``table`` with the same
+    keys and one ``n_name`` changed, dropping its stale Hadoop checksum."""
+    path = next(f for f in sorted(data_files(table)) if pq.read_metadata(f).num_rows)
+    Path(path).with_name(f".{Path(path).name}.crc").unlink(missing_ok=True)
+    t = pq.read_table(path)
+    names = t.column("n_name").to_pylist()
+    names[0] += "!"
+    i = t.schema.get_field_index("n_name")
+    pq.write_table(t.set_column(i, "n_name", pa.array(names, t.schema.field(i).type)), path)
+
+
+@pytest.mark.parametrize("disposition", [WD.MERGE, WD.APPEND], ids=["merge", "append-keyed"])
+def test_parquet_rejects_same_keys_with_an_altered_value(spark, packages, tmp_path, disposition):
+    dest = ParquetDestination(tmp_path / "t", merge_keys=KEYS)
+    receipt = dest.commit(spark, packages["a"], disposition)
+    assert dest.verify(spark, replace(receipt), packages["a"]).verified
+    _rewrite_one_value(tmp_path / "t")
+    assert not dest.verify(spark, replace(receipt), packages["a"]).verified
+
+
+def test_parquet_replace_rejects_a_foreign_file(spark, packages, tmp_path):
+    dest = ParquetDestination(tmp_path / "t", merge_keys=KEYS)
+    receipt = dest.commit(spark, packages["a"], WD.REPLACE)
+    assert dest.verify(spark, replace(receipt), packages["a"]).verified
+    shutil.copyfile(packages["b"].segments()[0], tmp_path / "t" / "foreign.parquet")
+    assert not dest.verify(spark, replace(receipt), packages["a"]).verified
+
+
+def _tagged_jobs(spark, fn):
+    """Run ``fn`` under a fresh job tag; return (result, jobs it ran)."""
+    sc = spark.sparkContext
+    tag = f"parquet-merge-{uuid.uuid4().hex[:8]}"
+    sc.addJobTag(tag)
+    try:
+        out = fn()
+    finally:
+        sc.removeJobTag(tag)
+    return out, len(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
+
+
+@pytest.mark.parametrize("seed", ["spark", "pyarrow"])
+def test_parquet_merge_job_count_guard(spark, sf_dir, packages, tmp_path, seed):
+    """A MERGE into an existing table runs at most 3 Spark jobs to
+    commit (target schema, key broadcast, survivors write) and none to
+    verify. The schema costs no job when the first footer records
+    Spark's schema, so a Spark-written target takes at most 2; the
+    first MERGE into a missing table is a pure copy."""
+    dest = ParquetDestination(tmp_path / "t", merge_keys=KEYS)
+    if seed == "spark":
+        _, first = _tagged_jobs(spark, lambda: dest.commit(spark, packages["b"], WD.MERGE))
+        assert first == 0
+    else:
+        (tmp_path / "t").mkdir()
+        shutil.copyfile(f"{sf_dir}/nation.parquet", tmp_path / "t" / "nation.parquet")
+    receipt, commit_jobs = _tagged_jobs(spark, lambda: dest.commit(spark, packages["a"], WD.MERGE))
+    receipt, verify_jobs = _tagged_jobs(spark, lambda: dest.verify(spark, receipt, packages["a"]))
+    assert receipt.verified
+    assert verify_jobs == 0 and 1 <= commit_jobs <= {"spark": 2, "pyarrow": 3}[seed], (commit_jobs, verify_jobs)
+    assert dest.read(spark).count() == {"spark": 50, "pyarrow": 25}[seed]
+
+
+def _package(spark, root, rows, ddl):
+    return PackageBuilder(root, "guard").build(admitted=spark.createDataFrame(rows, ddl))
+
+
+@pytest.mark.parametrize(
+    "ddl, column",
+    [("id long, v string", "'id'"), ("id int", "'v'")],
+    ids=["int-target-long-package", "missing-column"],
+)
+def test_parquet_merge_refuses_a_package_whose_columns_differ(spark, tmp_path, ddl, column):
+    dest = ParquetDestination(tmp_path / "t", merge_keys=["id"])
+    dest.commit(spark, _package(spark, tmp_path / "p1", [(1, "a"), (2, "b")], "id int, v string"), WD.MERGE)
+    before = sorted(os.listdir(tmp_path / "t"))
+    rows = [(2, "B"), (3, "c")] if "v" in ddl else [(2,), (3,)]
+    with pytest.raises(ValueError, match=column):
+        dest.commit(spark, _package(spark, tmp_path / "p2", rows, ddl), WD.MERGE)
+    assert sorted(os.listdir(tmp_path / "t")) == before
+    assert not (tmp_path / "t.staging").exists()
+    assert sorted(dest.read(spark).collect()) == [(1, "a"), (2, "b")]
+
+
+@pytest.mark.parametrize("existing", [False, True], ids=["first-commit", "rewrite"])
+def test_parquet_merge_ignores_a_stale_staging_dir(spark, tmp_path, existing):
+    """A killed commit can leave ``<table>.staging`` behind; its rows
+    must not land with the next MERGE."""
+    ddl = "id int, v string"
+    dest = ParquetDestination(tmp_path / "t", merge_keys=["id"])
+    expected = {3: "c", 4: "d"}
+    if existing:
+        dest.commit(spark, _package(spark, tmp_path / "p0", [(1, "a"), (3, "x")], ddl), WD.MERGE)
+        expected[1] = "a"
+    spark.createDataFrame([(9, "stale"), (3, "stale")], ddl).write.parquet(str(tmp_path / "t.staging"))
+    pkg = _package(spark, tmp_path / "p1", [(3, "c"), (4, "d")], ddl)
+    receipt = dest.verify(spark, dest.commit(spark, pkg, WD.MERGE), pkg)
+    assert receipt.verified
+    assert sorted(dest.read(spark).collect()) == sorted(expected.items())

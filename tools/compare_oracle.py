@@ -81,24 +81,31 @@ def compare(spark, con, name: str, fn, oracle: str | None, sf_dir: str) -> dict:
     return out
 
 
+def selected(queries: dict, only: list[str]) -> list[str]:
+    """The registry names to check, in registry order: every query, or
+    the ones named. A name that matches no query raises, naming it."""
+    unknown = sorted(set(only) - queries.keys())
+    if unknown:
+        raise ValueError(f"unknown queries: {', '.join(unknown)}")
+    return [name for name in queries if not only or name in only]
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
 
     from cdf_spark.queries import ORACLES, QUERIES
     from cdf_spark.session import get_spark
 
+    names = selected(QUERIES, sys.argv[2:])
     spark = get_spark("oracle-compare")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     failures = 0
-    for name, fn in QUERIES.items():
-        if only and name not in only:
-            continue
+    for name in names:
         try:
-            r = compare(spark, con, name, fn, ORACLES.get(name), sf_dir)
+            r = compare(spark, con, name, QUERIES[name], ORACLES.get(name), sf_dir)
         except Exception as e:
             r = {"query": name, "status": f"ERROR {type(e).__name__}: {str(e)[:200]}", "ok": False}
         flag = "✓" if r["ok"] else "✗"
@@ -109,7 +116,7 @@ def main():
                 print("   first diff:", r["first_diff"])
             if "detail" in r:
                 print("   ", r["detail"])
-    print(f"\n{len(QUERIES) - failures}/{len(QUERIES)} ok")
+    print(f"\n{len(names) - failures}/{len(names)} ok")
     spark.stop()
     sys.exit(1 if failures else 0)
 
