@@ -24,7 +24,7 @@ Layout:
   package/      segmented parquet packages, stats zone-maps, manifests,
                 receipts + checkpoint ledger
   streaming/    watermark policies (incl. non-timestamp domains),
-                epochs, drain termination
+                execution extents, the streaming load pipeline
 """
 
 __version__ = "0.1.0"

@@ -500,48 +500,6 @@ def minhash_lsh_pairs(
     return verified.select("id_a", "id_b", "jaccard")
 
 
-# Deterministic multiply-shift permutation constants for the hybrid
-# minhash path (fixed seed; identical on driver and every executor).
-_MH_RNG = _np.random.RandomState(42)
-_MH_A = (_MH_RNG.randint(1, 2**62, size=64, dtype=_np.uint64) * _np.uint64(2) + _np.uint64(1))
-_MH_B = _MH_RNG.randint(0, 2**62, size=64, dtype=_np.uint64)
-
-
-def _minhash_signatures_hybrid(df: DataFrame, text_col: str, id_col: str, n: int, k: int) -> DataFrame:
-    """Signature stage, hybrid JVM+numpy: grams are hashed ONCE JVM-side
-    (xxhash64, codegen), then the k permutations are multiply-shift
-    transforms vectorized in a single Arrow-batched pandas UDF —
-    measured 2x over evaluating k higher-order folds (interpreted) per
-    row. Output columns: (id, _txt, sig).
-
-    Docs with no grams (len < n) are dropped — they cannot be shingle
-    near-duplicates and a shared sentinel signature would band-collide
-    every empty doc with every other."""
-    assert k <= 64, "k beyond the precomputed permutation bank"
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(F.col(text_col)) - n + 1, F.lit(0))),
-        lambda i: F.col(text_col).substr(i, F.lit(n)),
-    )
-    hashed = df.select(
-        F.col(id_col).alias("id"),
-        F.col(text_col).alias("_txt"),
-        F.transform(grams, lambda g: F.xxhash64(g)).alias("_gh"),
-    ).filter(F.size("_gh") >= 1)
-
-    A, B = _MH_A[:k], _MH_B[:k]
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def mh(hs: pd.Series) -> pd.Series:
-        out = []
-        for arr in hs:
-            a = _np.asarray(arr, dtype=_np.uint64)
-            m = (a[:, None] * A + B) >> _np.uint64(1)
-            out.append(m.min(0).astype(_np.int64).tolist())
-        return pd.Series(out)
-
-    return hashed.select("id", "_txt", mh(F.col("_gh")).alias("sig"))
-
-
 def simhash64(col: Column, hash_fn: str = "xxhash64") -> Column:
     """64-bit SimHash over whitespace tokens.
 

@@ -254,11 +254,20 @@ class PackageBuilder:
     @staticmethod
     def verify(spark: SparkSession, package_path: str | Path) -> bool:
         """Re-hash a package's data and check it against the manifest —
-        the replay-integrity check (golden-package equality by values)."""
+        the replay-integrity check (golden-package equality by values).
+        The recorded schema must be the manifest's, and the data's column
+        names and types the recorded ones. Nullability is not compared:
+        Spark reads every parquet column back as nullable."""
         pkg = Path(package_path)
         manifest = json.loads((pkg / "manifest.json").read_text())
+        recorded = CanonicalSchema.from_json((pkg / "schema" / "schema.json").read_text())
         df = spark.read.parquet(str(pkg / "data"))
+
+        def columns(schema: CanonicalSchema) -> list[tuple[str, str]]:
+            return [(f.name, f.type) for f in schema.fields]
+
         return (
-            dataset_value_hash(df) == manifest["value_hash"]
-            and CanonicalSchema.from_spark(df.schema).fingerprint() == manifest["schema_fingerprint"]
+            recorded.fingerprint() == manifest["schema_fingerprint"]
+            and columns(CanonicalSchema.from_spark(df.schema)) == columns(recorded)
+            and dataset_value_hash(df) == manifest["value_hash"]
         )

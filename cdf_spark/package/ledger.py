@@ -139,6 +139,8 @@ class ParquetDestination:
         package: PackageResult,
         disposition: WriteDisposition = WriteDisposition.APPEND,
     ) -> Receipt:
+        if not self.table_path.exists():
+            self._restore_swapped_table()
         if disposition is WriteDisposition.APPEND:
             self._copy_segments(package, self.table_path)
         elif disposition is WriteDisposition.REPLACE:
@@ -166,12 +168,32 @@ class ParquetDestination:
         for name, seg in self._segments(package).items():
             shutil.copy2(seg, into / name)
 
+    def _swapped_aside(self) -> list[Path]:
+        """The `<table>.old-*` siblings `_publish` renames the live table to."""
+        prefix, parent = self.table_path.name + ".old-", self.table_path.parent
+        return sorted(p for p in parent.iterdir() if p.name.startswith(prefix)) if parent.is_dir() else []
+
+    def _restore_swapped_table(self) -> None:
+        """A commit killed between `_publish`'s two renames leaves no table
+        dir and the live table in one `<table>.old-*` sibling: rename it
+        back. The killed commit issued no receipt, so the replay redoes
+        it. More than one such sibling is ambiguous and raises."""
+        aside = self._swapped_aside()
+        if len(aside) > 1:
+            raise RuntimeError(
+                f"{self.table_path} is missing and {len(aside)} swapped-aside copies exist: "
+                f"{[p.name for p in aside]}; restore one by hand"
+            )
+        if aside:
+            aside[0].rename(self.table_path)
+
     def _publish(self, package: PackageResult, survivors: DataFrame | None) -> None:
         """Replace the table with `survivors` plus the package's segments,
         near-atomically: the new table is materialized in a staging dir
         (cleared first: a killed commit's leftovers never land), the live
         dir is renamed aside, staging renames into place, then the old copy
-        is deleted — at every instant a complete table exists on disk."""
+        is deleted, with any stale copy an earlier killed commit left — at
+        every instant a complete table exists on disk."""
         tmp = self.table_path.with_name(self.table_path.name + ".staging")
         if tmp.exists():
             shutil.rmtree(tmp)
@@ -189,8 +211,8 @@ class ParquetDestination:
             if old.exists() and not self.table_path.exists():
                 old.rename(self.table_path)
             raise
-        if old.exists():
-            shutil.rmtree(old)
+        for stale in self._swapped_aside():
+            shutil.rmtree(stale)
 
     def _survivors(self, spark: SparkSession, package: PackageResult, first: str) -> DataFrame:
         """Target rows whose key is not in the package (null-safe;

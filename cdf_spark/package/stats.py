@@ -246,55 +246,11 @@ def parquet_row_count(path) -> int:
     return sum(pq.read_metadata(f).num_rows for f in data_files(path))
 
 
-def _profile_aggs(df: DataFrame, with_hash: bool = True):
-    """Shared aggregate list for profile/hash computation."""
-    aggs = []
-    plan: list[tuple[str, bool]] = []
-    for f in df.schema.fields:
-        simple = isinstance(f.dataType, _STATS_TYPES)
-        plan.append((f.name, simple))
-        c = F.col(f.name)
-        aggs.append(F.sum(c.isNull().cast("long")).alias(f"{f.name}__nulls"))
-        if simple:
-            aggs.append(F.min(c).alias(f"{f.name}__min"))
-            aggs.append(F.max(c).alias(f"{f.name}__max"))
-    aggs.append(F.count(F.lit(1)).alias("__rows"))
-    if with_hash:
-        aggs.extend(_vhash_aggs(sorted(df.columns)))
-    return aggs, plan
-
-
-def _observe_profile(df: DataFrame):
-    """Attach the profile/hash aggregates as an Observation so they are
-    computed DURING the next action (e.g. the segment write) — zero
-    extra passes. Returns (observed_df, observation)."""
-    from pyspark.sql import Observation
-
-    aggs, _ = _profile_aggs(df, with_hash=True)
-    obs = Observation()
-    return df.observe(obs, *aggs), obs
-
-
 def _observe_count(df: DataFrame):
     from pyspark.sql import Observation
 
     obs = Observation()
     return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
-
-
-def _parse_observation(df: DataFrame, row: dict) -> tuple[dict[str, dict], str]:
-    """Turn observed metrics back into (stats, value_hash)."""
-    _, plan = _profile_aggs(df, with_hash=False)
-    out: dict[str, dict] = {}
-    for name, simple in plan:
-        entry: dict = {"null_count": int(row[f"{name}__nulls"] or 0), "complete": simple}
-        if simple:
-            entry["min"] = _scalar(row[f"{name}__min"])
-            entry["max"] = _scalar(row[f"{name}__max"])
-        out[name] = entry
-    n = int(row["__rows"])
-    out["__table"] = {"rows": n}
-    return out, _vhash_render(row, n)
 
 
 def prune_segments(segments: list[dict], column: str, op: str, value) -> list[dict]:

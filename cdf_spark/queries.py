@@ -4984,7 +4984,7 @@ def resident_restart_stream(spark: SparkSession, sf: str) -> DataFrame:
 
     from .package.ledger import ParquetDestination
     from .sources.base import ResourceDescriptor, WriteDisposition
-    from .streaming.epochs import EpochPolicy, StreamExtent
+    from .streaming.epochs import StreamExtent
     from .streaming.pipeline import StreamingLoadPipeline
 
     schema = T.StructType(
@@ -5027,7 +5027,7 @@ def resident_restart_stream(spark: SparkSession, sf: str) -> DataFrame:
                 destination=ParquetDestination(f"{tmp}/dest"),
                 disposition=WriteDisposition.APPEND,
                 extent=StreamExtent.RESIDENT,
-                epoch_policy=EpochPolicy(trigger_interval="1 seconds"),
+                trigger_interval="1 seconds",
             )
 
         def _run_until(pipe: StreamingLoadPipeline, expect_rows: int) -> None:

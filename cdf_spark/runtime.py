@@ -46,7 +46,6 @@ from .operators.dedup import dedup_keyed
 from .operators.late_data import classify_late_data
 from .package.builder import PackageBuilder, PackageResult
 from .package.ledger import CheckpointLedger, ParquetDestination, Receipt
-from .package.stats import dataset_value_hash
 from .plans.scan import ScanPlan, ScanRequest
 from .sources.base import ResourceDescriptor, WriteDisposition
 from .sources.files import FileResource
@@ -78,9 +77,6 @@ class LoadPipeline:
     late_action: str = "annotate"
     predicates: list[Expr] = field(default_factory=list)
     projection: list[str] | None = None
-    # positions merged into the checkpoint beyond the cursor field —
-    # how snapshot-table sources (Iceberg/Delta) record their frontier
-    extra_positions: dict = field(default_factory=dict)
     # parquet codec for package segments: snappy default (the general
     # storage trade); "none" for encode-roofline workloads where the
     # downstream rereads immediately and bytes are cheap
@@ -188,8 +184,7 @@ class LoadPipeline:
             trace("settlement_permit_asserted", permit_id=permit.permit_id)
         receipt, positions = deliver_package(
             spark, package, self.destination, self.disposition, self.ledger,
-            cursor_field=desc.cursor.field if desc.cursor else None,
-            positions=self.extra_positions, trace=trace,
+            cursor_field=desc.cursor.field if desc.cursor else None, trace=trace,
         )
         if permit is not None:
             SchemaAuthority(schemas, desc.resource_id).release_permit(permit)
@@ -342,8 +337,8 @@ def replay_package(spark: SparkSession, package_path: str, destination: ParquetD
     source of truth; no upstream read happens. Delivery follows
     `deliver_package` with no ledger. A package read back from disk may
     have changed since its build, and a byte-rule verify only proves its
-    segments landed, so the receipt also needs the segments to re-hash
-    to the manifest's value hash."""
+    segments landed, so the receipt also needs the package to pass
+    `PackageBuilder.verify`."""
     manifest = json.loads((Path(package_path) / "manifest.json").read_text())
     pkg = PackageResult(
         package_id=manifest["package_id"],
@@ -356,5 +351,5 @@ def replay_package(spark: SparkSession, package_path: str, destination: ParquetD
     )
     receipt = deliver_package(spark, pkg, destination, disposition, None)[0]
     if receipt is not None and receipt.verified:
-        receipt.verified = dataset_value_hash(spark.read.parquet(pkg.data_path())) == pkg.value_hash
+        receipt.verified = PackageBuilder.verify(spark, package_path)
     return receipt

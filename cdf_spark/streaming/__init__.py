@@ -1,4 +1,4 @@
-from .epochs import DrainTermination, EpochPolicy, StreamExtent
+from .epochs import StreamExtent
 from .pipeline import StreamingLoadPipeline
 from .stateful import streaming_dedup_first, streaming_session_agg
 from .watermark import WatermarkLedger, WatermarkPolicy, combine_partition_watermarks
@@ -7,8 +7,6 @@ __all__ = [
     "streaming_dedup_first",
     "streaming_session_agg",
     "StreamExtent",
-    "EpochPolicy",
-    "DrainTermination",
     "WatermarkPolicy",
     "WatermarkLedger",
     "combine_partition_watermarks",

@@ -1,26 +1,21 @@
-"""Execution extents, epoch policy, and drain termination.
+"""Execution extents.
 
 Re-expresses `ExecutionExtent::{Bounded, Drain, Resident}`
-(`crates/cdf-kernel/src/execution_extent.rs:20-33`), `StreamEpochPolicy`
-(`:131-145`) and `DrainTermination` (`:246-252`) on Structured
+(`crates/cdf-kernel/src/execution_extent.rs:20-33`) on Structured
 Streaming:
 
-  Bounded   -> plain batch read
-  Drain     -> Trigger.AvailableNow (finite catch-up) + termination
-               budgets enforced in foreachBatch
+  Bounded   -> plain batch read (`runtime.LoadPipeline`)
+  Drain     -> Trigger.AvailableNow: runs to the source frontier, stops
   Resident  -> Trigger.ProcessingTime (continuous micro-batches)
 
 An *epoch* is the engine's commit unit. In Spark it maps onto the
-micro-batch: each foreachBatch invocation carries (batch_df, epoch_id);
-the epoch policy decides when a package rotates (row/byte/duration
-ceilings) and the drain controller decides when a Drain extent is done
-(quiescent / record budget / byte budget / duration / source frontier).
+micro-batch: each foreachBatch invocation carries (batch_df, epoch_id).
+Spark's trigger decides where an epoch ends; the stream reader's
+options (e.g. `maxFilesPerTrigger`) bound its size.
 """
 
 from __future__ import annotations
 
-import time
-from dataclasses import dataclass
 from enum import Enum
 
 
@@ -28,66 +23,3 @@ class StreamExtent(str, Enum):
     BOUNDED = "bounded"
     DRAIN = "drain"
     RESIDENT = "resident"
-
-
-@dataclass
-class EpochPolicy:
-    """Package rotation triggers within a resident stream
-    (`StreamEpochPolicy`, execution_extent.rs:131-145)."""
-
-    max_rows: int | None = 4 * 1024 * 1024
-    max_bytes: int | None = 256 * 1024 * 1024
-    max_duration_ms: int | None = None
-    trigger_interval: str = "10 seconds"  # Trigger.ProcessingTime for Resident
-
-    def rotation_due(self, rows: int, bytes_: int, started_ms: int, now_ms: int | None = None) -> str | None:
-        """Return the closure cause if the epoch should rotate."""
-        now_ms = now_ms or int(time.time() * 1000)
-        if self.max_rows is not None and rows >= self.max_rows:
-            return "rows"
-        if self.max_bytes is not None and bytes_ >= self.max_bytes:
-            return "bytes"
-        if self.max_duration_ms is not None and now_ms - started_ms >= self.max_duration_ms:
-            return "duration"
-        return None
-
-
-@dataclass
-class DrainTermination:
-    """Finite-drain stop conditions (`execution_extent.rs:246-252`)."""
-
-    quiescent_batches: int = 1          # stop after N consecutive empty batches
-    max_records: int | None = None
-    max_bytes: int | None = None
-    max_duration_ms: int | None = None
-
-    def should_stop(self, state: "DrainState") -> str | None:
-        if state.consecutive_empty >= self.quiescent_batches:
-            return "quiescent"
-        if self.max_records is not None and state.records >= self.max_records:
-            return "records"
-        if self.max_bytes is not None and state.bytes >= self.max_bytes:
-            return "bytes"
-        if self.max_duration_ms is not None and state.elapsed_ms() >= self.max_duration_ms:
-            return "duration"
-        return None
-
-
-@dataclass
-class DrainState:
-    records: int = 0
-    bytes: int = 0
-    consecutive_empty: int = 0
-    started_ms: int = 0
-
-    def __post_init__(self):
-        if not self.started_ms:
-            self.started_ms = int(time.time() * 1000)
-
-    def observe_batch(self, rows: int, bytes_: int = 0) -> None:
-        self.records += rows
-        self.bytes += bytes_
-        self.consecutive_empty = 0 if rows else self.consecutive_empty + 1
-
-    def elapsed_ms(self) -> int:
-        return int(time.time() * 1000) - self.started_ms

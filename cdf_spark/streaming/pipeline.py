@@ -48,7 +48,7 @@ from ..package.ledger import CheckpointLedger
 from ..plans.checkpoint import observed_get
 from ..runtime import Trace, build_package, deliver_package
 from ..sources.base import ResourceDescriptor, WriteDisposition
-from .epochs import DrainState, DrainTermination, EpochPolicy, StreamExtent
+from .epochs import StreamExtent
 from .watermark import (
     WatermarkLedger,
     WatermarkPolicy,
@@ -84,11 +84,11 @@ class StreamingLoadPipeline:
     destination: object | None = None
     disposition: WriteDisposition = WriteDisposition.APPEND
     extent: StreamExtent = StreamExtent.DRAIN
-    epoch_policy: EpochPolicy = field(default_factory=EpochPolicy)
-    termination: DrainTermination = field(default_factory=DrainTermination)
+    # Trigger.ProcessingTime interval for a RESIDENT extent
+    trigger_interval: str = "10 seconds"
     source_format: str = "parquet"
     # options for the stream reader (e.g. maxFilesPerTrigger to bound
-    # epoch size — the rows/bytes axis of EpochPolicy for file sources)
+    # epoch size for file sources)
     reader_options: dict = field(default_factory=dict)
 
     # run auto-maintenance on the destination's table every N verified
@@ -212,25 +212,7 @@ class StreamingLoadPipeline:
             q.awaitTermination()
             return self.epochs
         if self.extent is StreamExtent.RESIDENT:
-            q = writer.trigger(processingTime=self.epoch_policy.trigger_interval).start()
+            q = writer.trigger(processingTime=self.trigger_interval).start()
             return q
         raise ValueError("BOUNDED extent uses runtime.LoadPipeline, not the stream path")
 
-
-def run_drain_with_budget(
-    pipeline: StreamingLoadPipeline,
-    spark: SparkSession,
-    termination: DrainTermination,
-) -> tuple[list[EpochResult], str]:
-    """Drain with explicit budgets: process availableNow, then evaluate
-    the termination ledger (records/bytes/duration/quiescent). Returns
-    (epochs, stop_cause). Budgets that trip mid-drain stop the query at
-    the next epoch boundary — epochs are never split."""
-    state = DrainState()
-    epochs = pipeline.run(spark)
-    for ep in epochs:
-        state.observe_batch(ep.rows_admitted)
-        cause = termination.should_stop(state)
-        if cause and cause != "quiescent":
-            return epochs, cause
-    return epochs, "quiescent"

@@ -1,52 +1,10 @@
-"""Normalization, reconciliation, corrections, compressed formats."""
+"""Corrections and compressed formats."""
 
 import json
 
 import pytest
 
-from cdf_spark.contracts import Contract, RangeRule, evaluate_contract
-from cdf_spark.contracts.normalization import IdentifierPolicy, normalize_columns, normalize_identifier
-from cdf_spark.contracts.reconciliation import Reconciliation, ReconciliationError, reconcile_contract_result
 from cdf_spark.package.correction import CorrectionSpec, apply_correction
-
-
-def test_normalize_identifier_rules():
-    p = IdentifierPolicy()
-    assert normalize_identifier("CamelCaseCol", p) == "camel_case_col"
-    assert normalize_identifier("weird col-name!", p) == "weird_col_name_"
-    assert normalize_identifier("9lives", p) == "_9lives"
-    assert normalize_identifier("select", p) == "select_"
-    assert normalize_identifier("nested.field.name", p) == "nested__field__name"
-    long = "x" * 100
-    assert len(normalize_identifier(long, p)) == 63
-
-
-def test_normalize_collision_handling():
-    p = IdentifierPolicy()
-    taken: set[str] = set()
-    a = normalize_identifier("My Col", p, taken)
-    b = normalize_identifier("my-col", p, taken)
-    c = normalize_identifier("my_col", p, taken)
-    assert a == "my_col" and b == "my_col_1" and c == "my_col_2"
-
-
-def test_normalize_columns_dataframe(spark):
-    df = spark.createDataFrame([(1, 2, 3)], ["UserId", "user id", "order"])
-    res = normalize_columns(df)
-    assert res.df.columns == ["user_id", "user_id_1", "order_"]
-    assert res.mapping["UserId"] == "user_id"
-
-
-def test_reconciliation_balance(spark):
-    df = spark.createDataFrame([(i, float(i)) for i in range(10)], "id long, v double")
-    contract = Contract(rules=[RangeRule("v", min=0.0, max=5.0)])
-    res = evaluate_contract(df, contract)
-    rec = reconcile_contract_result(10, res)
-    assert rec.balanced
-    assert rec.splits == {"admitted": 6, "quarantined": 4}
-
-    with pytest.raises(ReconciliationError):
-        Reconciliation(10).record("admitted", 4).record("quarantined", 3).assert_balanced()
 
 
 @pytest.fixture()

@@ -229,3 +229,31 @@ def test_falsification_duplicate_pair_swap_detected(spark, tmp_path):
     from cdf_spark.package.stats import dataset_value_hash
 
     assert dataset_value_hash(x2) != dataset_value_hash(z2)
+
+
+def test_verify_ignores_nullability(spark, tmp_path):
+    """`spark.range` columns are NOT NULL; Spark reads every parquet
+    column back as nullable. That difference alone must not fail the
+    integrity check."""
+    pkg = PackageBuilder(tmp_path, "ids").build(admitted=spark.range(5))
+    assert not spark.range(5).schema["id"].nullable
+    assert PackageBuilder.verify(spark, pkg.path)
+
+
+def test_falsification_column_type_change_detected(spark, tmp_path):
+    """A segment rewritten with one column retyped (string -> binary,
+    same bytes) keeps the value hash, since xxhash64 folds both types
+    alike. The column-type check must catch it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cdf_spark.package.stats import dataset_value_hash
+
+    pkg = PackageBuilder(tmp_path, "kv").build(admitted=_golden_frame(spark))
+    for seg in pkg.segments():
+        Path(seg).with_name(f".{Path(seg).name}.crc").unlink(missing_ok=True)
+        t = pq.read_table(seg).replace_schema_metadata(None)  # Spark's footer schema would win
+        i = t.schema.get_field_index("name")
+        pq.write_table(t.set_column(i, pa.field("name", pa.binary()), t.column(i).cast(pa.binary())), seg)
+    assert dataset_value_hash(spark.read.parquet(pkg.data_path())) == pkg.value_hash
+    assert not PackageBuilder.verify(spark, pkg.path)

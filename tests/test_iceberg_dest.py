@@ -252,57 +252,6 @@ def test_concurrent_commit_detected(spark, tmp_path, orders):
     assert t.read(spark).count() == 100
 
 
-def test_incremental_iceberg_to_iceberg_mirror(spark, tmp_path, orders):
-    """Composition: an Iceberg SOURCE table incrementally mirrored into
-    an Iceberg DESTINATION through the full pipeline (changes_since ->
-    contract-free load -> package -> commit -> checkpoint). Each source
-    commit becomes one mirror snapshot; a no-op round touches nothing;
-    the mirror converges to the source state."""
-    from cdf_spark.package import CheckpointLedger
-    from cdf_spark.sources import ResourceDescriptor
-    from cdf_spark.sources.iceberg import IcebergFixtureWriter
-    from cdf_spark.sources.snapshot_resource import SnapshotLoadPipeline
-
-    o = orders.select("o_orderkey", "o_totalprice")
-    src = IcebergFixtureWriter(tmp_path / "src", seed=61)
-    src.append(o.filter(F.col("o_orderkey") <= 400), timestamp_ms=1000)
-
-    def mirror_round():
-        return SnapshotLoadPipeline(
-            table=IcebergTable(tmp_path / "src"),
-            descriptor=ResourceDescriptor(resource_id="orders_mirror"),
-            ledger=CheckpointLedger(tmp_path / "ledger"),
-            package_root=str(tmp_path / "pkgs"),
-            destination=IcebergDestination(tmp_path / "dst"),
-            disposition=WriteDisposition.APPEND,
-        ).run(spark)
-
-    r1 = mirror_round()
-    assert r1 is not None and r1.receipt.verified
-    n1 = IcebergTable(tmp_path / "dst").read(spark).count()
-    assert n1 == o.filter(F.col("o_orderkey") <= 400).count()
-
-    # no new source commits -> nothing moves
-    assert mirror_round() is None
-    assert len(IcebergTable(tmp_path / "dst").ancestry()) == 1
-
-    # two more source commits, one mirror round each
-    src.append(o.filter((F.col("o_orderkey") > 400) & (F.col("o_orderkey") <= 900)),
-               timestamp_ms=2000)
-    r2 = mirror_round()
-    assert r2 is not None and r2.receipt.verified
-    src.append(o.filter(F.col("o_orderkey") > 900), timestamp_ms=3000)
-    r3 = mirror_round()
-    assert r3 is not None and r3.receipt.verified
-
-    dst = IcebergTable(tmp_path / "dst")
-    assert len(dst.ancestry()) == 3  # one mirror snapshot per delta
-    assert dst.read(spark).count() == o.count()
-    src_rows = sorted((r.o_orderkey, r.o_totalprice) for r in IcebergTable(tmp_path / "src").read(spark).collect())
-    dst_rows = sorted((r.o_orderkey, r.o_totalprice) for r in dst.read(spark).collect())
-    assert src_rows == dst_rows
-
-
 def test_append_into_partitioned_table_keeps_pruning(spark, tmp_path, orders):
     """Committing into an EXISTING partitioned table routes through the
     partition-splitting path (spec rehydrated from metadata), so new

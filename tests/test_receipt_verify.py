@@ -16,8 +16,9 @@ matrix.
 
 After the matrix, ParquetDestination's own cases: its byte rule rejects
 altered values and foreign files, and its MERGE commit is held to a job
-budget, refuses a package whose columns differ from the target's, and
-ignores a stale staging dir.
+budget, refuses a package whose columns differ from the target's,
+ignores a stale staging dir, and recovers a table a killed swap left
+renamed aside.
 """
 
 from __future__ import annotations
@@ -263,3 +264,47 @@ def test_parquet_merge_ignores_a_stale_staging_dir(spark, tmp_path, existing):
     receipt = dest.verify(spark, dest.commit(spark, pkg, WD.MERGE), pkg)
     assert receipt.verified
     assert sorted(dest.read(spark).collect()) == sorted(expected.items())
+
+
+@pytest.mark.parametrize("disposition", [WD.MERGE, WD.APPEND])
+def test_parquet_commit_restores_a_table_swapped_aside(spark, tmp_path, disposition):
+    """A commit killed between ``_publish``'s two renames leaves no
+    table dir and the live rows in ``<table>.old-*``. The next commit
+    renames them back before it lands its package."""
+    ddl = "id int, v string"
+    dest = ParquetDestination(tmp_path / "t", merge_keys=["id"])
+    dest.commit(spark, _package(spark, tmp_path / "p0", [(i, "old") for i in range(10)], ddl), WD.APPEND)
+    (tmp_path / "t").rename(tmp_path / "t.old-x")
+    pkg = _package(spark, tmp_path / "p1", [(i, "new") for i in range(8, 12)], ddl)
+    receipt = dest.verify(spark, dest.commit(spark, pkg, disposition), pkg)
+    assert receipt.verified
+    got = sorted(dest.read(spark).collect())
+    if disposition is WD.MERGE:
+        assert got == [(i, "old") for i in range(8)] + [(i, "new") for i in range(8, 12)]
+        assert not (tmp_path / "t.old-x").exists()
+    else:
+        assert got == sorted([(i, "old") for i in range(10)] + [(i, "new") for i in range(8, 12)])
+
+
+def test_parquet_commit_refuses_two_swapped_aside_copies(spark, tmp_path):
+    ddl = "id int, v string"
+    dest = ParquetDestination(tmp_path / "t", merge_keys=["id"])
+    for name in ("t.old-a", "t.old-b"):
+        spark.createDataFrame([(1, name)], ddl).write.parquet(str(tmp_path / name))
+    pkg = _package(spark, tmp_path / "p1", [(2, "new")], ddl)
+    with pytest.raises(RuntimeError, match=r"t\.old-a.*t\.old-b"):
+        dest.commit(spark, pkg, WD.MERGE)
+    assert not (tmp_path / "t").exists()
+
+
+def test_parquet_merge_deletes_stale_swapped_aside_copies(spark, tmp_path):
+    """A commit killed after the swap and before the delete leaves a
+    stale ``<table>.old-*`` beside a live table; the next MERGE removes it."""
+    ddl = "id int, v string"
+    dest = ParquetDestination(tmp_path / "t", merge_keys=["id"])
+    dest.commit(spark, _package(spark, tmp_path / "p0", [(1, "a")], ddl), WD.MERGE)
+    spark.createDataFrame([(9, "stale")], ddl).write.parquet(str(tmp_path / "t.old-x"))
+    pkg = _package(spark, tmp_path / "p1", [(2, "b")], ddl)
+    assert dest.verify(spark, dest.commit(spark, pkg, WD.MERGE), pkg).verified
+    assert sorted(dest.read(spark).collect()) == [(1, "a"), (2, "b")]
+    assert not (tmp_path / "t.old-x").exists()

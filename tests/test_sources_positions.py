@@ -1,6 +1,4 @@
-"""JDBC plan rendering, REST pagination, variant capture, positions, preview."""
-
-import json
+"""JDBC plan rendering, REST pagination, positions, preview."""
 
 import pytest
 
@@ -21,7 +19,6 @@ from cdf_spark.sources.base import CursorSpec, ResourceDescriptor
 from cdf_spark.sources.files import FileResource
 from cdf_spark.sources.jdbc import JdbcPartitionSpec, JdbcResource, render_sql_predicate
 from cdf_spark.sources.rest import Pagination, RestResource
-from cdf_spark.sources.variant import read_json_with_variant
 
 
 # --- JDBC -------------------------------------------------------------------
@@ -122,31 +119,6 @@ def test_rest_cursor_token_pagination(spark):
     df, last = res.read(spark)
     assert sorted(r.id for r in df.collect()) == [1, 2]
     assert last == "t1"
-
-
-# --- variant capture --------------------------------------------------------
-
-
-def test_variant_capture(spark, tmp_path):
-    p = tmp_path / "messy.ndjson"
-    p.write_text(
-        "\n".join(
-            [
-                json.dumps({"id": 1, "name": "a"}),
-                json.dumps({"id": 2, "name": "b", "extra": {"x": 1}, "tag": "t"}),
-                "not json at all {{{",
-                json.dumps({"id": 4, "name": "d"}),
-            ]
-        )
-    )
-    res = read_json_with_variant(spark, str(p), {"id": "int64", "name": "utf8"})
-    assert set(res.unknown_fields) == {"extra", "tag"}
-    rows = {r.id: r for r in res.admitted.collect()}
-    assert rows[1]._cdf_variant is None
-    v = json.loads(rows[2]._cdf_variant)
-    assert v == {"extra": {"x": 1}, "tag": "t"}
-    assert res.quarantined.count() == 1
-    assert "not json" in res.quarantined.collect()[0]._cdf_raw
 
 
 # --- positions --------------------------------------------------------------

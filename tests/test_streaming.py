@@ -12,15 +12,12 @@ from cdf_spark.contracts import Contract, RangeRule
 from cdf_spark.package.ledger import ParquetDestination
 from cdf_spark.sources.base import ResourceDescriptor, WriteDisposition
 from cdf_spark.streaming import (
-    DrainTermination,
-    EpochPolicy,
     StreamExtent,
     StreamingLoadPipeline,
     WatermarkLedger,
     WatermarkPolicy,
     combine_partition_watermarks,
 )
-from cdf_spark.streaming.epochs import DrainState
 from cdf_spark.streaming.watermark import observed_frontier
 
 
@@ -69,28 +66,6 @@ def test_observed_frontier_temporal_and_numeric(spark):
     assert f == ts - datetime.timedelta(seconds=60)
     f = observed_frontier(df, WatermarkPolicy("seq", delay=10))
     assert f == 90
-
-
-def test_epoch_policy_rotation():
-    p = EpochPolicy(max_rows=100, max_bytes=1000, max_duration_ms=5000)
-    assert p.rotation_due(rows=100, bytes_=0, started_ms=0, now_ms=1) == "rows"
-    assert p.rotation_due(rows=0, bytes_=1000, started_ms=0, now_ms=1) == "bytes"
-    assert p.rotation_due(rows=0, bytes_=0, started_ms=0, now_ms=6000) == "duration"
-    assert p.rotation_due(rows=1, bytes_=1, started_ms=0, now_ms=1) is None
-
-
-def test_drain_termination_budgets():
-    t = DrainTermination(quiescent_batches=2, max_records=1000)
-    s = DrainState()
-    s.observe_batch(600)
-    assert t.should_stop(s) is None
-    s.observe_batch(500)
-    assert t.should_stop(s) == "records"
-    s2 = DrainState()
-    s2.observe_batch(0)
-    assert t.should_stop(s2) is None
-    s2.observe_batch(0)
-    assert t.should_stop(s2) == "quiescent"
 
 
 EVENT_SCHEMA = T.StructType(
@@ -421,7 +396,6 @@ def test_resident_restart_exactly_once(spark, tmp_path):
     from cdf_spark.package.ledger import CheckpointLedger
     from cdf_spark.package.maintenance import MaintenancePolicy
     from cdf_spark.sources.delta import DeltaTable
-    from cdf_spark.streaming.epochs import EpochPolicy
 
     src = tmp_path / "in"
     src.mkdir()
@@ -445,7 +419,7 @@ def test_resident_restart_exactly_once(spark, tmp_path):
             ledger_root=str(tmp_path / "ledger"),
             destination=DeltaDestination(tmp_path / "dest"),
             extent=StreamExtent.RESIDENT,
-            epoch_policy=EpochPolicy(trigger_interval="1 seconds"),
+            trigger_interval="1 seconds",
             maintenance_every_epochs=2,
             maintenance_policy=MaintenancePolicy(
                 small_file_bytes=1 << 30, min_small_files=2

@@ -1,11 +1,10 @@
-"""Subprocess adapters and the semantic layer."""
+"""Subprocess adapters."""
 
 import sys
 
 from pyspark.sql import functions as F
 
 from cdf_spark.sources.subprocess_source import run_ndjson_subprocess, run_singer_tap
-from cdf_spark.types.semantics import SemanticDefinition, SemanticRegistry
 
 NDJSON_PRODUCER = r"""
 import json
@@ -41,51 +40,6 @@ def test_singer_tap_protocol(spark):
     assert dict(res.df.dtypes)["id"] == "bigint"
     assert dict(res.df.dtypes)["ts"] == "timestamp_ntz"
     assert res.df.filter(F.col("email").isNull()).count() == 1
-
-
-def test_semantic_resolution_and_annotation(spark):
-    reg = SemanticRegistry()
-    df = spark.createDataFrame(
-        [(1, "a@b.co", '{"k":1}', "507f1f77bcf86cd799439011")],
-        "user_id long, email string, props string, doc_id string",
-    )
-    # NB doc_id matches mongodb object pattern (_id suffix)
-    annotated = reg.annotate(df)
-    sems = reg.semantics_of(annotated)
-    assert sems["email"]["name"] == "cdf.email@1" and sems["email"]["privacy"] == "pii"
-    assert sems["props"]["name"] == "postgres.jsonb_text@1"
-    assert sems["doc_id"]["name"] == "mongodb.object_id@1"
-    assert "user_id" not in sems  # int column: no utf8 semantics
-    assert reg.pii_columns(annotated) == ["email"]
-
-    # metadata survives a parquet roundtrip
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        annotated.write.mode("overwrite").parquet(d + "/t")
-        back = spark.read.parquet(d + "/t")
-        assert reg.semantics_of(back)["email"]["name"] == "cdf.email@1"
-
-
-def test_semantic_validation(spark):
-    reg = SemanticRegistry()
-    df = spark.createDataFrame(
-        [("good@x.io",), ("not-an-email",), (None,)], "email string"
-    )
-    out = reg.validate(df)
-    got = [r._sem_valid_email for r in out.collect()]
-    assert got == [True, False, False]
-
-
-def test_exact_name_outranks_pattern(spark):
-    reg = SemanticRegistry()
-    reg.register(
-        SemanticDefinition("custom.exact@1", "utf8", match_names=["email"], privacy="secret")
-    )
-    from pyspark.sql import types as T
-
-    sem = reg.resolve("email", T.StringType())
-    assert sem.name == "custom.exact@1"
 
 
 AIRBYTE_SOURCE = r"""
